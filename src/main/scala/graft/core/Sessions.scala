@@ -13,6 +13,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** Local core count when none is given: the host's cores, capped at 32. */
+  val DefaultCores: Int = Runtime.getRuntime.availableProcessors.min(32)
+
+  /** `SPARK_GRAFT_CPUS` when set, else [[DefaultCores]]: the local core
+    * count of the mains.
+    */
+  def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(DefaultCores)(_.toInt)
+
   /** Apply graft's standard configuration to any builder. */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -50,7 +58,7 @@ object Sessions {
     * returned session: builder-time `withExtensions` is silently dropped
     * when `getOrCreate` reuses a session that already exists in the JVM.
     */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
+  def local(cores: Int = DefaultCores): SparkSession = {
     val s = configure(SparkSession.builder().master(s"local[$cores]"), cores)
       .appName("graft")
       .withExtensions(new graft.GraftExtensions()(_))

@@ -89,16 +89,8 @@ object Bpe extends org.apache.spark.internal.Logging {
       .otherwise(array().cast("array<struct<l:string,r:string>>"))
   }
 
-  /** Vocabulary-size gate for the in-memory trainer: ~2 M distinct
-    * words ≈ a few hundred MB of driver heap with the pair maps — the
-    * [[Components]] driverUnionFind sizing discipline. Web-text
-    * vocabularies are ~100 k words INDEPENDENT of corpus size (the one
-    * corpus pass already collapsed occurrences), so at 100 TB this
-    * gate still admits the driver path; the distributed fallback
-    * exists for pathological vocabularies (random strings, binary
-    * spill), not for big corpora.
-    */
-  val MaxDriverVocab: Long = 2L * 1000 * 1000
+  /** Driver-lane budget: 2M words + pair maps ≈ a few hundred MB of driver heap. */
+  val DriverMaxRows: Long = 2L * 1000 * 1000
 
   /** How many top pairs each distributed round collects as batch
     * candidates — also the max merges one round can apply. 16 keeps
@@ -116,7 +108,7 @@ object Bpe extends org.apache.spark.internal.Logging {
     * 10-word corpus should hear about it, not get 7 merges silently).
     *
     * Scale shape: ONE corpus pass builds the word-frequency table;
-    * when it fits under `maxDriverVocab` (the normal case — see the
+    * when it fits under `driverMaxRows` (the normal case — see the
     * gate's doc) training runs IN MEMORY on the driver with an
     * incremental pair-count lazy-heap: O(total pair updates · log)
     * instead of one Spark job per merge round, which at a production
@@ -141,10 +133,13 @@ object Bpe extends org.apache.spark.internal.Logging {
     * divergent and a stable fixture) — it is a documented corpus-prep
     * choice (the GPT-2/SentencePiece lineage does the same), default
     * OFF.
+    *
+    * @param driverMaxRows [[graft.core.DriverLane]] cap, in distinct
+    *   words after `freqFloor` (negative: always the distributed trainer).
     */
   def trainMerges(
       docs: DataFrame, nMerges: Int, textCol: String = "text",
-      maxDriverVocab: Long = MaxDriverVocab,
+      driverMaxRows: Long = DriverMaxRows,
       freqFloor: Long = 1L,
       batchTopK: Int = DefaultBatchTopK): Seq[(String, String)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
@@ -157,10 +152,11 @@ object Bpe extends org.apache.spark.internal.Logging {
                     else allWords)
       .localCheckpoint()
     try {
-      if (wordFreq.count() <= maxDriverVocab)
-        trainInMemory(
-          wordFreq.collect().map(r => (r.getString(0), r.getLong(1))), nMerges)
-      else trainDistributed(wordFreq, nMerges, batchTopK)
+      import wordFreq.sparkSession.implicits._
+      graft.core.DriverLane.collectIfAtMost(wordFreq.as[(String, Long)], driverMaxRows) match {
+        case Some(words) => trainInMemory(words, nMerges)
+        case None => trainDistributed(wordFreq, nMerges, batchTopK)
+      }
     } finally Lineage.release(wordFreq)
   }
 

@@ -30,18 +30,8 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Edge lists small enough to solve on the driver. Budget honestly:
-    * 2M collected (Long, Long) tuples plus union-find HashMaps over up
-    * to 4M node entries is ~300-500 MB transient driver heap (boxing +
-    * map-entry overhead, not 16 bytes/edge), comfortably inside the
-    * default driver but far below where the distributed path is needed.
-    * Near-dup edge lists are usually orders of magnitude smaller than
-    * the corpus — the same size asymmetry broadcast joins exploit — so
-    * the common case pays one collect + exact union-find instead of
-    * diameter-bound rounds of driver-synchronized Spark jobs. Above the
-    * threshold the distributed label propagation below takes over.
-    */
-  private val DriverMaxEdges = 2L * 1000 * 1000
+  /** Driver-lane budget: 2M raw pairs + union-find maps ≈ 300-500 MB of driver heap. */
+  private val DriverMaxRows = 2L * 1000 * 1000
 
   /** @param pairs undirected edge list (one row per pair; direction and
     *   duplicates are normalized away here). CONSUMED: any
@@ -52,54 +42,41 @@ object Components {
     *   sit in the block manager until GC (observed as the q95 bench
     *   leak). Callers needing the pair frame afterwards should pass a
     *   recomputable plan or re-checkpoint.
+    * @param driverMaxRows [[graft.core.DriverLane]] cap, in raw non-null
+    *   pair rows (negative: always the distributed rounds).
     * @return (node, component) — component = min node id reachable
     */
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25,
-      driverMaxEdges: Long = DriverMaxEdges): DataFrame = {
-    val e0 = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+      driverMaxRows: Long = DriverMaxRows): DataFrame = {
+    // LAZY localCheckpoint of the raw pairs (the KCore shape): the gate
+    // and, over it, the distributed normalization both read these
+    // blocks, so the caller's producer plan runs once in either lane
+    val cleaned = pairs
+      .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+      .localCheckpoint(false)
 
-    // Small-graph fast path: exact driver-side union-find, gated by a
-    // LIMIT-probed collect of the RAW pair list — ONE job, no shuffle
-    // (r15: the old gate normalized first — union(reverse) + distinct +
-    // persist + count + collect was three passes and a cache write over
-    // the pair plan, and for the quadratic exact-dedup producers every
-    // pass re-scans O(N²) work or its cache; union-find needs neither
-    // direction-doubling nor dedup, duplicates and self-loops are
-    // absorbed). The limit makes the gate safe: an oversized edge list
-    // collects only driverMaxEdges+1 rows before falling to the
-    // distributed path. `driverMaxEdges` therefore now counts RAW pair
-    // rows, not normalized directed edges — same scale, same budget
-    // rationale (see DriverMaxEdges).
-    if (driverMaxEdges >= 0) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val probeCap = driverMaxEdges + 1
-      require(probeCap <= Int.MaxValue, s"driverMaxEdges too large: $driverMaxEdges")
-      // typed collect: primitive-friendly tuple encoding, no Row boxing
-      val probe = e0.where(col("src").isNotNull && col("dst").isNotNull)
-        .limit(probeCap.toInt).as[(Long, Long)].collect()
-      if (probe.length <= driverMaxEdges) {
+    // Small-graph fast path: union-find over the RAW pairs needs neither
+    // direction-doubling nor dedup (duplicates and self-loops are absorbed)
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    graft.core.DriverLane.collectIfAtMost(cleaned.as[(Long, Long)], driverMaxRows) match {
+      case Some(edges) =>
+        Lineage.release(cleaned)
         Lineage.release(pairs) // see @param pairs
-        val labeled = driverUnionFind(probe)
-        return spark.createDataset(labeled).toDF("node", "component")
-      }
-      // over the gate: fall through and pay the normalization the
-      // distributed rounds need (the probe is discarded — its truncated
-      // edge set is not a valid input to anything)
+        return spark.createDataset(driverUnionFind(edges)).toDF("node", "component")
+      case None => // over the gate: the distributed rounds below
     }
 
     // ONE explode of both orientations, not union-of-two-selects: the
-    // union embedded the caller's pair plan twice, and the producers
-    // that overflow the driver gate are exactly the quadratic exact-
-    // dedup plans a double evaluation hurts most
-    val edgesPlan = e0
+    // union would read the raw pairs twice
+    val edgesPlan = cleaned
       .select(explode(array(
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("a"))
       .select(col("a.src").as("src"), col("a.dst").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
 
     // Iterative dataflow MUST truncate lineage each round: chaining the
     // round-N plan onto round-N-1 doubles the logical tree per
@@ -159,15 +136,15 @@ object Components {
       // checkpoint keeps. The former shape paid distinct's (src, dst)
       // exchange + persist + count + a SECOND full-|E| exchange inside
       // checkpointByKey — two passes and a cache write over the raw
-      // pair plan for the same materialized table. Trade-off: the
-      // build job runs AQE-off (checkpointKeepingLayout mechanics), so
-      // a caller whose PRODUCER plan needs AQE (skew-split heavy join)
-      // should localCheckpoint the pair list before calling; the
-      // over-gate bench producer (q97) is a narrow scan projection.
+      // pair plan for the same materialized table. The build job runs
+      // AQE-off (checkpointKeepingLayout mechanics), but it only reads
+      // the staged raw pairs: the caller's producer plan was planned
+      // under the session's AQE by the staging checkpoint above.
       edgesByDst = graft.core.Partitioning.checkpointKeepingLayout(
         edgesPlan.repartition(col("dst")).dropDuplicates("src", "dst"))
-      // edge set materialized — the input pair plan is consumed now
-      // (see @param pairs)
+      // edge set materialized — the raw pairs and the input pair plan
+      // are consumed now (see @param pairs)
+      Lineage.release(cleaned)
       Lineage.release(pairs)
 
       // Per-round checkpoints build under AQE, deliberately FORGETTING
@@ -237,6 +214,7 @@ object Components {
         "(pathological chain graph — use a log-round decomposition at this scale)")
     } catch {
       case t: Throwable =>
+        Lineage.release(cleaned)
         if (edgesByDst != null) Lineage.release(edgesByDst)
         if (propagatedCp != null) Lineage.release(propagatedCp)
         if (labelsCp != null) Lineage.release(labelsCp)

@@ -55,21 +55,8 @@ object KCore {
     */
   private val BroadcastMaxPeel = 4L * 1000 * 1000
 
-  /** Small-graph gate for the exact driver-side cascade (the
-    * [[Components]] union-find precedent, same 4M budget): under it the
-    * whole peel runs as one collect + linear-time bucket cascade — a
-    * synchronous distributed loop pays ~4 job launches per round for a
-    * graph that fits in a few tens of MB. Above it the delta-peel loop
-    * below takes over. Counts RAW pair rows (r16, the Components-r15
-    * gate shape): the probe is a LIMIT-bounded typed collect of the
-    * raw stream — one job, no shuffle — and normalization (both
-    * directions, dedup) happens on the driver inside [[driverPeel]];
-    * the former gate normalized distributively first, paying the
-    * explode + repartition exchange + checkpoint write + count for
-    * exactly the graphs small enough not to need them. Same scale,
-    * same ~300-500 MB transient-heap budget rationale.
-    */
-  private val DriverMaxArcs = 4L * 1000 * 1000
+  /** Driver-lane budget: 4M raw pairs + cascade maps ≈ 300-500 MB of driver heap. */
+  private val DriverMaxRows = 4L * 1000 * 1000
 
   /** Textbook cascade over RAW undirected pairs (self-loops/nulls
     * pre-filtered by the caller; any orientation, duplicates fine —
@@ -122,41 +109,35 @@ object KCore {
     * internally; self-loops dropped). Returns (vertex, core_degree):
     * the surviving vertices with their degree INSIDE the core
     * (≥ k by construction). Empty result when no k-core exists.
+    *
+    * @param driverMaxRows [[graft.core.DriverLane]] cap, in raw pair rows
+    *   before dedup (negative: always the distributed loop).
     */
   def core(
       pairs: DataFrame, aCol: String, bCol: String, k: Int,
-      maxIter: Int = 50, driverMaxArcs: Long = DriverMaxArcs): DataFrame = {
+      maxIter: Int = 50, driverMaxRows: Long = DriverMaxRows): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // LAZY localCheckpoint: the gate probe below and (over the gate)
-    // the prep both read THIS frame — one LogicalRDD, one shuffle
+    // LAZY localCheckpoint: the driver-lane gate below and (over the
+    // gate) the prep both read THIS frame — one LogicalRDD, one shuffle
     // lineage — so the caller's producer plan evaluates its map stages
     // once no matter which lane runs. Two separate Dataset plans
-    // (probe vs prep) would each instantiate their own exchange and
+    // (gate vs prep) would each instantiate their own exchange and
     // the over-gate lane would pay the producer twice.
     val cleaned = pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .localCheckpoint(false)
 
-    // Small-graph fast path, gated by a LIMIT-probed collect of the RAW
-    // pair list (the Components-r15 gate): the cascade dedups and
-    // direction-doubles on the driver, so for graphs under the gate the
-    // distributed explode + repartition exchange + dedup + arc
-    // checkpoint + count were pure overhead (solo q144 at sf0.1:
-    // 4.7 → 3.5 s). An oversized list collects only driverMaxArcs+1
-    // rows before falling through to the distributed lane, which then
-    // reads the same checkpointed raw blocks — the probe costs one
-    // bounded driver transfer, never a producer re-run.
-    if (driverMaxArcs >= 0) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val probeCap = driverMaxArcs + 1
-      require(probeCap <= Int.MaxValue, s"driverMaxArcs too large: $driverMaxArcs")
-      val probe = cleaned.limit(probeCap.toInt).as[(Long, Long)].collect()
-      if (probe.length <= driverMaxArcs) {
+    // Small-graph fast path: the cascade dedups and direction-doubles on
+    // the driver, skipping the distributed prep (solo q144 at sf0.1:
+    // 4.7 → 3.5 s)
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    graft.core.DriverLane.collectIfAtMost(cleaned.as[(Long, Long)], driverMaxRows) match {
+      case Some(raw) =>
         release(cleaned)
-        return spark.createDataset(driverPeel(probe, k)).toDF("vertex", "core_degree")
-      }
+        return spark.createDataset(driverPeel(raw, k)).toDF("vertex", "core_degree")
+      case None =>
     }
 
     // over the gate: pay the normalization the distributed rounds need.

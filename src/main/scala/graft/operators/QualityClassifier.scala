@@ -108,13 +108,8 @@ object QualityClassifier {
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).cast("double").as("m"))
 
-  /** Feature-row gate for the in-memory trainer — the
-    * [[LangId.MaxDriverFeatureRows]] / [[Bpe.MaxDriverVocab]] sizing
-    * discipline: labeled quality data is curated and corpus-size-
-    * independent, so production training slices collect; the
-    * distributed loop remains for oversized label dumps.
-    */
-  val MaxDriverFeatureRows: Long = 8L * 1000 * 1000
+  /** Driver-lane budget: 8M feature rows + per-doc index ≈ a few hundred MB of driver heap. */
+  val DriverMaxRows: Long = 8L * 1000 * 1000
 
   /** Train logistic-regression weights on labeled documents
     * (`labelCol` ∈ {0, 1}). Fixed `iters` full-batch rounds at
@@ -122,7 +117,7 @@ object QualityClassifier {
     * object doc). Fails loudly on an empty corpus or a label outside
     * {0, 1} (a silently coerced label poisons every weight).
     *
-    * Under `maxDriverRows` (the normal case) the gradient loop runs
+    * Under `driverMaxRows` (the normal case) the gradient loop runs
     * IN MEMORY on the driver — one collect of the feature table, zero
     * per-iteration job launches — bit-identical to the distributed
     * loop: row contributions are rounded to decimal(38,18) exactly as
@@ -130,12 +125,15 @@ object QualityClassifier {
     * decimal adds, sigmoid/update double arithmetic replays the same
     * operation order (QualityClassifierSpec pins the lane
     * equivalence).
+    *
+    * @param driverMaxRows [[graft.core.DriverLane]] cap, in staged
+    *   (doc, bucket) feature rows (negative: always the distributed loop).
     */
   def train(
       docs: DataFrame, labelCol: String, nBuckets: Int = DefaultBuckets,
       iters: Int = DefaultIters, lr: Double = DefaultLearningRate,
       idCol: String = "doc_id", textCol: String = "text",
-      maxDriverRows: Long = MaxDriverFeatureRows): Model = {
+      driverMaxRows: Long = DriverMaxRows): Model = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val labels = docs.select(col(idCol).cast("long").as("doc_id"),
       col(labelCol).cast("double").as("y"))
@@ -156,18 +154,14 @@ object QualityClassifier {
     try {
       val nDocs = labels.count()
       require(nDocs > 0, "cannot train on an empty corpus")
-      // gate count first (cheap — feat is checkpointed; collecting to
-      // discover the table is oversized would defeat the gate), then a
-      // TYPED one-pass collect: the encoder builds the tuple array
-      // directly, no transient Array[Row] copy (advice r14).
-      val w =
-        if (feat.count() <= maxDriverRows) {
-          import feat.sparkSession.implicits._
-          trainRowsInMemory(
-            feat.select(col("doc_id"), col("b"), col("x"), col("y"))
-              .as[(Long, Long, Double, Double)].collect(),
-            nBuckets, iters, lr, nDocs)
-        } else trainDistributed(feat, nBuckets, iters, lr, nDocs)
+      // typed: one-pass tuple array, no transient Array[Row] (advice r14)
+      import feat.sparkSession.implicits._
+      val rows = feat.select(col("doc_id"), col("b"), col("x"), col("y"))
+        .as[(Long, Long, Double, Double)]
+      val w = graft.core.DriverLane.collectIfAtMost(rows, driverMaxRows) match {
+        case Some(inMemory) => trainRowsInMemory(inMemory, nBuckets, iters, lr, nDocs)
+        case None => trainDistributed(feat, nBuckets, iters, lr, nDocs)
+      }
       Model(nBuckets, w)
     } finally Lineage.release(feat)
   }

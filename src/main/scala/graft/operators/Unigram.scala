@@ -52,7 +52,7 @@ import org.apache.spark.sql.functions._
   * corpus size, so at 100 TB the driver lane still holds; `freqFloor`
   * is the same tail-drop lever). Seeding is one distributed
   * explode+groupBy over the vocabulary — substring mass in exact longs.
-  * Above `maxDriverVocab` the E-step runs distributed: words
+  * Above `driverMaxRows` the E-step runs distributed: words
   * mapPartitions against the BROADCAST piece table (a few hundred KB),
   * one decimal-sum aggregate per round — no shuffle grows with corpus
   * size, only with |vocab|. Apply segments only DISTINCT words
@@ -61,10 +61,8 @@ import org.apache.spark.sql.functions._
   */
 object Unigram extends org.apache.spark.internal.Logging {
 
-  /** Vocabulary-size gate for the in-memory EM lane — the
-    * [[Bpe.MaxDriverVocab]] budget and rationale, verbatim.
-    */
-  val MaxDriverVocab: Long = 2L * 1000 * 1000
+  /** Driver-lane budget: the [[Bpe.DriverMaxRows]] word budget. */
+  val DriverMaxRows: Long = Bpe.DriverMaxRows
 
   val DefaultMaxPieceLen = 6
   val DefaultEmRounds = 4
@@ -262,6 +260,9 @@ object Unigram extends org.apache.spark.internal.Logging {
     * pieces over the corpus. Fails loudly on an empty corpus or a
     * vocabulary target smaller than the corpus alphabet (single code
     * points are never pruned — below that there is no lossless model).
+    *
+    * @param driverMaxRows [[graft.core.DriverLane]] cap, in distinct
+    *   words after `freqFloor` (negative: always the distributed E-step).
     */
   def train(
       docs: DataFrame, vocabSize: Int, textCol: String = "text",
@@ -270,7 +271,7 @@ object Unigram extends org.apache.spark.internal.Logging {
       pruneAfter: Int = DefaultPruneAfter,
       seedMax: Int = 0,
       freqFloor: Long = 1L,
-      maxDriverVocab: Long = MaxDriverVocab): Model = {
+      driverMaxRows: Long = DriverMaxRows): Model = {
     require(vocabSize >= 1, s"vocabSize must be >= 1, got $vocabSize")
     require(emRounds >= 1 && pruneAfter >= 1 && pruneAfter <= emRounds,
       s"need 1 <= pruneAfter <= emRounds, got $pruneAfter/$emRounds")
@@ -286,8 +287,11 @@ object Unigram extends org.apache.spark.internal.Logging {
                     else allWords)
       .localCheckpoint()
     try {
-      val nWords = wordFreq.count()
-      require(nWords > 0, "cannot train on an empty corpus")
+      import wordFreq.sparkSession.implicits._
+      val wordsInMemory =
+        graft.core.DriverLane.collectIfAtMost(wordFreq.as[(String, Long)], driverMaxRows)
+      require(wordsInMemory.fold(!wordFreq.isEmpty)(_.nonEmpty),
+        "cannot train on an empty corpus")
 
       // ---- seed: distributed substring mass in exact longs — one
       // explode+groupBy over the VOCABULARY (not the corpus). substr is
@@ -320,17 +324,12 @@ object Unigram extends org.apache.spark.internal.Logging {
       val counts0 = seed.map(x => java.math.BigDecimal.valueOf(x._2))
       var model = mStep(pieces0, counts0, maxPieceLen)
 
-      val driverLane = nWords <= maxDriverVocab
-      lazy val wordsInMemory: Array[(String, Long)] = {
-        import wordFreq.sparkSession.implicits._
-        wordFreq.as[(String, Long)].collect()
-      }
-
       var round = 1
       while (round <= emRounds) {
-        val counts =
-          if (driverLane) eStepInMemory(wordsInMemory, model)
-          else eStepDistributed(wordFreq, model)
+        val counts = wordsInMemory match {
+          case Some(words) => eStepInMemory(words, model)
+          case None => eStepDistributed(wordFreq, model)
+        }
         var next = mStep(model.pieces, counts, maxPieceLen)
         if (round == pruneAfter && next.pieces.length > vocabSize) {
           // prune by EXACT expected-count decimals (count desc, piece

