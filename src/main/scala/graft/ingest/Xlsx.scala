@@ -1,6 +1,5 @@
 package graft.ingest
 
-import java.util.zip.ZipFile
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable
@@ -44,9 +43,10 @@ object Xlsx {
     * the offending path (house fail-loud style, cf. N3/D4) rather than
     * silently aligning columns by position.
     */
-  /** Per-task memory bound for the distributed path: one workbook's
-    * residency is its raw `content` bytes (binaryFile materializes the
-    * file per row) + the parsed string grid — and NOTHING else, since
+  /** Per-workbook memory bound (per task on the distributed path, on
+    * the driver for [[readGrid]]): one workbook's residency is its raw
+    * bytes (binaryFile materializes the file per row) + the parsed
+    * string grid — and NOTHING else, since
     * round 11's central-directory streaming ([[ZipBytesParts]]) removed
     * the inflated-part buffers that used to triple the footprint (the
     * old 64 MB bound's rationale). The bound is therefore 4× looser
@@ -131,16 +131,23 @@ object Xlsx {
       .map(_.getPath).sorted.toSeq
   }
 
-  /** Parse the named sheet into a padded string cell grid. */
+  /** Parse the named sheet into a padded string cell grid: the file's
+    * bytes go through [[readGridBytes]], so a local workbook gets the
+    * same zip-bomb bound as a distributed one.
+    */
   def readGrid(path: String, sheetName: String): Seq[Seq[String]] = {
-    val zip =
-      try new ZipFile(path)
-      catch {
+    val file = java.nio.file.Paths.get(path)
+    val bytes =
+      try {
+        val size = java.nio.file.Files.size(file)
+        require(size <= MaxWorkbookBytes,
+          s"$path: $size bytes exceeds the workbook bound of $MaxWorkbookBytes")
+        java.nio.file.Files.readAllBytes(file)
+      } catch {
         case e: java.io.IOException =>
           throw new IllegalArgumentException(s"$path is not a readable xlsx: ${e.getMessage}", e)
       }
-    try readParts(new FileParts(zip), sheetName)
-    finally zip.close()
+    readGridBytes(bytes, sheetName, path)
   }
 
   /** Parse the named sheet from workbook BYTES — the executor-side
@@ -160,30 +167,13 @@ object Xlsx {
           throw new IllegalArgumentException(
             s"$sourceName is not a readable xlsx: ${ex.getMessage}", ex)
       }
-    readParts(parts, sheetName)
-  }
-
-  private def readParts(parts: Parts, sheetName: String): Seq[Seq[String]] = {
     val shared = readSharedStrings(parts)
     val dateStyles = readDateStyles(parts)
     val (sheetPart, epoch1904) = resolveSheetPart(parts, sheetName)
     readSheet(parts, sheetPart, shared, dateStyles, epoch1904)
   }
 
-  /** Random-access view over a workbook's zip parts: a ZipFile for a
-    * local path (driver), or a pre-read entry map for bytes that
-    * arrived through `binaryFile` on an executor.
-    */
-  private sealed trait Parts {
-    def open(name: String): Option[java.io.InputStream]
-    def describe: String
-  }
-  private final class FileParts(zip: ZipFile) extends Parts {
-    def open(name: String): Option[java.io.InputStream] =
-      Option(zip.getEntry(name)).map(zip.getInputStream)
-    def describe: String = zip.getName
-  }
-  /** Random-access Parts over workbook BYTES via the zip CENTRAL
+  /** Random-access view over workbook BYTES via the zip CENTRAL
     * DIRECTORY — no part is ever inflated into a buffer (round 11,
     * replacing the former prefetch-everything entry map): each `open`
     * locates the entry from the directory and STREAMS it through an
@@ -204,7 +194,7 @@ object Xlsx {
     * sane config-workbook bound.
     */
   private final class ZipBytesParts(
-      bytes: Array[Byte], val describe: String, maxPartBytes: Long) extends Parts {
+      bytes: Array[Byte], val describe: String, maxPartBytes: Long) {
     private def u16(off: Int): Int =
       (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
     private def u32(off: Int): Long =
@@ -346,7 +336,7 @@ object Xlsx {
     * `<numFmt>` codes are classified by [[isDateFormatCode]]; only the
     * `<cellXfs>` list maps cell `s` indexes (cellStyleXfs does not).
     */
-  private def readDateStyles(parts: Parts): IndexedSeq[Boolean] =
+  private def readDateStyles(parts: ZipBytesParts): IndexedSeq[Boolean] =
     withPart(parts, "xl/styles.xml") { r =>
       val customDate = mutable.Map.empty[Int, Boolean]
       val flags = mutable.ArrayBuffer.empty[Boolean]
@@ -434,7 +424,7 @@ object Xlsx {
     f
   }
 
-  private def withPart[A](parts: Parts, name: String)(f: XMLStreamReader => A): Option[A] =
+  private def withPart[A](parts: ZipBytesParts, name: String)(f: XMLStreamReader => A): Option[A] =
     parts.open(name).map { in =>
       val r = factory.createXMLStreamReader(in)
       // the zip-bomb refusal fires inside the parser's reads now
@@ -455,7 +445,7 @@ object Xlsx {
   /** sharedStrings.xml: each <si> is one string — concatenate every <t>
     * inside it (plain or rich-text runs), EXCLUDING phonetic guides
     * (<rPh>/<phoneticPr> furigana would otherwise corrupt the value). */
-  private def readSharedStrings(parts: Parts): IndexedSeq[String] =
+  private def readSharedStrings(parts: ZipBytesParts): IndexedSeq[String] =
     withPart(parts, "xl/sharedStrings.xml") { r =>
       val out = mutable.ArrayBuffer.empty[String]
       val cur = new StringBuilder
@@ -492,7 +482,7 @@ object Xlsx {
     * would double the inflate+parse cost on every workbook in the
     * distributed ingest path). Returns (sheet part, 1904-epoch flag).
     */
-  private def resolveSheetPart(parts: Parts, sheetName: String): (String, Boolean) = {
+  private def resolveSheetPart(parts: ZipBytesParts, sheetName: String): (String, Boolean) = {
     var epoch1904 = false
     val rid = withPart(parts, "xl/workbook.xml") { r =>
       var found: Option[String] = None
@@ -530,7 +520,7 @@ object Xlsx {
     * values resolved per cell type, gaps null-filled.
     */
   private def readSheet(
-      parts: Parts, part: String, shared: IndexedSeq[String],
+      parts: ZipBytesParts, part: String, shared: IndexedSeq[String],
       dateStyles: IndexedSeq[Boolean] = IndexedSeq.empty,
       epoch1904: Boolean = false): Seq[Seq[String]] = {
     case class Cell(row: Int, colIdx: Int, value: String)

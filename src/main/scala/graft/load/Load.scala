@@ -36,63 +36,70 @@ object Load {
     */
   def replaceTable(
       spark: SparkSession, df: DataFrame, destination: String,
-      format: String = "parquet",
-      decorateStaging: Path => Unit = _ => ()): Try[LoadReport] = {
+      format: String = "parquet"): Try[LoadReport] = {
     val result = Try {
-      val dest = new Path(destination)
-      val staging = new Path(destination + "__staging")
-      val backup = new Path(destination + "__old")
-      val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // A backup WITHOUT a destination means a prior swap's restore
-      // failed and the backup holds the only copy of the old table —
-      // clearing it on retry would destroy that copy right before
-      // re-attempting the same swap (same guard as the catalog and
-      // partition variants). A backup beside an existing destination is
-      // crash debris from after a successful publish — safe to clear.
-      if (fs.exists(backup) && !fs.exists(dest))
-        throw new IllegalStateException(
-          s"destination $destination is missing but backup $backup exists — a prior " +
-            "swap failed and was not restored; recover manually before loading")
-      val writer = df.write.mode(SaveMode.Overwrite).format(format)
-      (if (format == "csv") writer.option("header", "true") else writer)
-        .save(staging.toString)
-      // decorateStaging: sidecar metadata (underscore-prefixed files,
-      // which Spark readers ignore) written INTO the staging dir so it
-      // publishes atomically with the table in the same swap — e.g.
-      // streaming.SubstringIngest's applied-batch watermark, which must
-      // never be observable without the index state it describes.
-      decorateStaging(staging)
-      // Count-back with the WRITER's schema: inference would fail on an
-      // empty json stage (no rows to infer from) and default csv parsing
-      // (multiLine=false) miscounts values containing embedded newlines.
-      val rows = reader(spark, format, Some(df.schema))
-        .load(staging.toString).count()
-      // Swap via backup: the previous table is MOVED aside (not deleted)
-      // so a failed staging→dest rename can roll it back — deleting
-      // first would lose it exactly when rename fails (cross-filesystem
-      // staging, concurrent parent removal, ...).
-      if (fs.exists(backup)) fs.delete(backup, true)
-      val hadPrev = fs.exists(dest)
-      if (hadPrev && !fs.rename(dest, backup))
-        throw new java.io.IOException(s"backup rename $dest -> $backup failed")
-      try {
-        if (!fs.rename(staging, dest))
-          throw new java.io.IOException(s"rename $staging -> $dest returned false")
-      } catch {
-        case e: Throwable =>
-          // restore on ANY failure mode (thrown or returned-false), and
-          // report honestly whether the restore itself succeeded
-          val note =
-            if (!hadPrev) ""
-            else if (scala.util.Try(fs.rename(backup, dest)).getOrElse(false))
-              "; previous table restored"
-            else s"; RESTORE FAILED — previous table left at $backup"
-          throw new java.io.IOException(s"swap to $dest failed$note", e)
+      val rows = stagedSwap(spark, destination) { staging =>
+        val writer = df.write.mode(SaveMode.Overwrite).format(format)
+        (if (format == "csv") writer.option("header", "true") else writer)
+          .save(staging.toString)
+        // Count-back with the WRITER's schema: inference would fail on an
+        // empty json stage (no rows to infer from) and default csv parsing
+        // (multiLine=false) miscounts values containing embedded newlines.
+        reader(spark, format, Some(df.schema)).load(staging.toString).count()
       }
-      if (hadPrev) fs.delete(backup, true)
       LoadReport(rows, destination)
     }
     report(result, destination)
+  }
+
+  /** The staged directory swap every whole-directory publish goes
+    * through ([[replaceTable]], the index stores): `stage` fills
+    * `<destination>__staging` — anything written there, sidecar files
+    * included, publishes atomically with it — then the previous
+    * destination moves aside to `<destination>__old`, staging is renamed
+    * in, and the backup is deleted. Returns what `stage` returns.
+    */
+  def stagedSwap[T](spark: SparkSession, destination: String)(stage: Path => T): T = {
+    val dest = new Path(destination)
+    val staging = new Path(destination + "__staging")
+    val backup = new Path(destination + "__old")
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // A backup WITHOUT a destination means a prior swap's restore
+    // failed and the backup holds the only copy of the old table —
+    // clearing it on retry would destroy that copy right before
+    // re-attempting the same swap (same guard as the catalog and
+    // partition variants). A backup beside an existing destination is
+    // crash debris from after a successful publish — safe to clear.
+    if (fs.exists(backup) && !fs.exists(dest))
+      throw new IllegalStateException(
+        s"destination $destination is missing but backup $backup exists — a prior " +
+          "swap failed and was not restored; recover manually before loading")
+    if (fs.exists(staging)) fs.delete(staging, true)
+    val staged = stage(staging)
+    // Swap via backup: the previous table is MOVED aside (not deleted)
+    // so a failed staging→dest rename can roll it back — deleting
+    // first would lose it exactly when rename fails (cross-filesystem
+    // staging, concurrent parent removal, ...).
+    if (fs.exists(backup)) fs.delete(backup, true)
+    val hadPrev = fs.exists(dest)
+    if (hadPrev && !fs.rename(dest, backup))
+      throw new java.io.IOException(s"backup rename $dest -> $backup failed")
+    try {
+      if (!fs.rename(staging, dest))
+        throw new java.io.IOException(s"rename $staging -> $dest returned false")
+    } catch {
+      case e: Throwable =>
+        // restore on ANY failure mode (thrown or returned-false), and
+        // report honestly whether the restore itself succeeded
+        val note =
+          if (!hadPrev) ""
+          else if (scala.util.Try(fs.rename(backup, dest)).getOrElse(false))
+            "; previous table restored"
+          else s"; RESTORE FAILED — previous table left at $backup"
+        throw new java.io.IOException(s"swap to $dest failed$note", e)
+    }
+    if (hadPrev) fs.delete(backup, true)
+    staged
   }
 
   /** Partition-level staged replace: only the partitions PRESENT in

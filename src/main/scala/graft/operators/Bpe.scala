@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * word-frequency aggregate — every merge round runs over the
   * VOCABULARY table (≈100 k rows for web text, size-independent of the
   * corpus), localCheckpoint-ed per round with superseded-block release
-  * (the LabelProp discipline). Application folds each DISTINCT word
+  * (see [[Lineage]]). Application folds each DISTINCT word
   * once and joins the result back to token occurrences — O(vocab ·
   * merges) fold work plus one join that AQE broadcasts while the vocab
   * side is small.
@@ -148,16 +148,15 @@ object Bpe extends org.apache.spark.internal.Logging {
     val allWords = docs
       .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    val wordFreq = (if (freqFloor > 1L) allWords.where(col("freq") >= freqFloor)
-                    else allWords)
-      .localCheckpoint()
-    try {
+    Lineage.staging { st =>
+      val wordFreq = st((if (freqFloor > 1L) allWords.where(col("freq") >= freqFloor)
+                         else allWords).localCheckpoint())
       import wordFreq.sparkSession.implicits._
       graft.core.DriverLane.collectIfAtMost(wordFreq.as[(String, Long)], driverMaxRows) match {
         case Some(words) => trainInMemory(words, nMerges)
         case None => trainDistributed(wordFreq, nMerges, batchTopK)
       }
-    } finally Lineage.release(wordFreq)
+    }
   }
 
   /** Batched distributed trainer (round-12 verdict #2): instead of one
@@ -225,66 +224,65 @@ object Bpe extends org.apache.spark.internal.Logging {
       batchTopK: Int = DefaultBatchTopK,
       onRound: (Int, Seq[(String, String)]) => Unit = (_, _) => ()): Seq[(String, String)] = {
     require(batchTopK >= 1, s"batchTopK must be >= 1, got $batchTopK")
-    var vocab = wordFreq
-      .select(col("w"), col("freq"), initialSymstr(col("w")).as("symstr"))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(String, String)]
-    var done = 0
-    var rounds = 0
-    try {
+    Lineage.staging { st =>
+      var vocab = st(wordFreq
+        .select(col("w"), col("freq"), initialSymstr(col("w")).as("symstr"))
+        .localCheckpoint())
+      val merges = Seq.newBuilder[(String, String)]
+      var done = 0
+      var rounds = 0
       while (done < nMerges) {
         rounds += 1
-        val pairs = vocab
+        val pairs = st(vocab
           .select(col("freq"), explode(pairCol(col("symstr"))).as("pr"))
           .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
           .agg(sum(col("freq")).as("n"))
-          .localCheckpoint()
-        try {
-          val top = pairs
-            .orderBy(col("n").desc, col("l"), col("r"))
-            .limit(math.min(batchTopK, nMerges - done)).collect()
-            .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-          require(top.nonEmpty,
-            s"BPE training exhausted adjacent pairs after $done merges (requested $nMerges)")
-          // U_j inputs: per candidate symbol s, the max count of pairs
-          // (x, s) and (s, x) — one filtered aggregate over the pair
-          // table, collected small (<= 2*topK rows)
-          val candLs = top.map(_._1).distinct.toSeq
-          val candRs = top.map(_._2).distinct.toSeq
-          // keyed SEPARATELY by direction: U_j needs pairs (x, l_j) —
-          // the r-keyed max of symbol l_j — and (r_j, x) — the l-keyed
-          // max of r_j. Folding both directions per symbol would pull
-          // in pair_j itself (its own l == l_j), inflating U_j to
-          // >= c_j and blocking every extension
-          val maxIncoming = pairs.where(col("r").isin(candLs: _*))
-            .groupBy(col("r").as("s")).agg(max(col("n")).as("m"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          val maxOutgoing = pairs.where(col("l").isin(candRs: _*))
-            .groupBy(col("l").as("s")).agg(max(col("n")).as("m"))
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          // homograph probe (condition 3): which candidate concats are
-          // already live symbols? One isin-filtered distinct over the
-          // pair table, collected small (<= topK rows)
-          val candConcats = top.map(t => t._1 + t._2).distinct.toSeq
-          val liveConcats = pairs.select(col("l").as("s"))
-            .union(pairs.select(col("r").as("s")))
-            .where(col("s").isin(candConcats: _*))
-            .distinct().collect().map(_.getString(0)).toSet
-          val picked = planBatch(top, maxIncoming, maxOutgoing, liveConcats)
-          merges ++= picked
-          done += picked.size
-          onRound(rounds, picked)
-          if (done < nMerges) {
-            val next = vocab
-              .select(col("w"), col("freq"),
-                picked.foldLeft(col("symstr")) { case (s, (l, r)) =>
-                  applyOneMerge(s, l, r)
-                }.as("symstr"))
-              .localCheckpoint()
-            Lineage.release(vocab) // superseded the moment `next` materialized
-            vocab = next
-          }
-        } finally Lineage.release(pairs)
+          .localCheckpoint())
+        val top = pairs
+          .orderBy(col("n").desc, col("l"), col("r"))
+          .limit(math.min(batchTopK, nMerges - done)).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        require(top.nonEmpty,
+          s"BPE training exhausted adjacent pairs after $done merges (requested $nMerges)")
+        // U_j inputs: per candidate symbol s, the max count of pairs
+        // (x, s) and (s, x) — one filtered aggregate over the pair
+        // table, collected small (<= 2*topK rows)
+        val candLs = top.map(_._1).distinct.toSeq
+        val candRs = top.map(_._2).distinct.toSeq
+        // keyed SEPARATELY by direction: U_j needs pairs (x, l_j) —
+        // the r-keyed max of symbol l_j — and (r_j, x) — the l-keyed
+        // max of r_j. Folding both directions per symbol would pull
+        // in pair_j itself (its own l == l_j), inflating U_j to
+        // >= c_j and blocking every extension
+        val maxIncoming = pairs.where(col("r").isin(candLs: _*))
+          .groupBy(col("r").as("s")).agg(max(col("n")).as("m"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val maxOutgoing = pairs.where(col("l").isin(candRs: _*))
+          .groupBy(col("l").as("s")).agg(max(col("n")).as("m"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        // homograph probe (condition 3): which candidate concats are
+        // already live symbols? One isin-filtered distinct over the
+        // pair table, collected small (<= topK rows)
+        val candConcats = top.map(t => t._1 + t._2).distinct.toSeq
+        val liveConcats = pairs.select(col("l").as("s"))
+          .union(pairs.select(col("r").as("s")))
+          .where(col("s").isin(candConcats: _*))
+          .distinct().collect().map(_.getString(0)).toSet
+        val picked = planBatch(top, maxIncoming, maxOutgoing, liveConcats)
+        merges ++= picked
+        done += picked.size
+        onRound(rounds, picked)
+        if (done < nMerges) {
+          val next = st(vocab
+            .select(col("w"), col("freq"),
+              picked.foldLeft(col("symstr")) { case (s, (l, r)) =>
+                applyOneMerge(s, l, r)
+              }.as("symstr"))
+            .localCheckpoint())
+          st.drop(vocab) // superseded the moment `next` materialized
+          vocab = next
+        }
+        st.drop(pairs)
       }
       // batch-width visibility: count ties and adjacency mass bound the
       // achievable batching per corpus — make the realized ratio
@@ -293,7 +291,7 @@ object Bpe extends org.apache.spark.internal.Logging {
       logInfo(s"BPE distributed training: $done merges in $rounds rounds " +
         f"(avg batch ${done.toDouble / rounds}%.1f, batchTopK=$batchTopK)")
       merges.result()
-    } finally Lineage.release(vocab)
+    }
   }
 
   /** Batch selection (see [[trainDistributed]]'s conditions): the

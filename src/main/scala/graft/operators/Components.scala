@@ -49,14 +49,14 @@ object Components {
   def connectedComponents(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25,
-      driverMaxRows: Long = DriverMaxRows): DataFrame = {
+      driverMaxRows: Long = DriverMaxRows): DataFrame = Lineage.staging { st =>
     // LAZY localCheckpoint of the raw pairs (the KCore shape): the gate
     // and, over it, the distributed normalization both read these
     // blocks, so the caller's producer plan runs once in either lane
-    val cleaned = pairs
+    val cleaned = st(pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint(false)
+      .localCheckpoint(false))
 
     // Small-graph fast path: union-find over the RAW pairs needs neither
     // direction-doubling nor dedup (duplicates and self-loops are absorbed)
@@ -64,12 +64,15 @@ object Components {
     import spark.implicits._
     graft.core.DriverLane.collectIfAtMost(cleaned.as[(Long, Long)], driverMaxRows) match {
       case Some(edges) =>
-        Lineage.release(cleaned)
         Lineage.release(pairs) // see @param pairs
-        return spark.createDataset(driverUnionFind(edges)).toDF("node", "component")
-      case None => // over the gate: the distributed rounds below
+        spark.createDataset(driverUnionFind(edges)).toDF("node", "component")
+      case None => propagate(st, cleaned, pairs, maxIter)
     }
+  }
 
+  /** The distributed rounds over the staged raw pairs. */
+  private def propagate(
+      st: Lineage.Staging, cleaned: DataFrame, pairs: DataFrame, maxIter: Int): DataFrame = {
     // ONE explode of both orientations, not union-of-two-selects: the
     // union would read the raw pairs twice
     val edgesPlan = cleaned
@@ -95,16 +98,11 @@ object Components {
     // Rebuilding the frame from the checkpointed RDD resets stats to a
     // round-independent constant.
     //
-    // Storage discipline (the KCore pattern): every checkpoint handle is
-    // kept and released explicitly the moment the next eager checkpoint
-    // supersedes it. NOTE (round 10): rewrapKeepingLayout SHARES the
-    // checkpoint's persisted RDD — releasing a rewrap-derived frame
-    // releases the live checkpoint blocks themselves (lineage is
-    // truncated, so the blocks are unrecomputable). Release only the
-    // *Cp handles, never scratch frames built from a rewrap, while a
-    // round is in flight. Only the FINAL round's blocks survive the
-    // loop, and the returned frame references that checkpoint directly
-    // (no rewrap) so the consumer's Lineage.release(result) can free it.
+    // rewrapKeepingLayout SHARES the checkpoint's persisted RDD, so
+    // releasing a rewrap-derived frame releases the live checkpoint
+    // blocks themselves (lineage is truncated, so the blocks are
+    // unrecomputable): only the *Cp handles are tracked and dropped.
+    // The returned frame references the final checkpoint directly.
     // rewrapKeepingLayout (round 10): the public createDataFrame rewrap
     // reset stats but paid an InternalRow→Row→InternalRow codec round
     // trip per row per round; the bridge rebuilds the LogicalRDD on the
@@ -115,112 +113,91 @@ object Components {
     def rewrap(cp: DataFrame): DataFrame =
       org.apache.spark.sql.graft.DatasetBridge.rewrapKeepingLayout(cp)
 
-    // Init checkpoints live INSIDE the try below (the LabelProp
-    // discipline): a failed init job must release whatever it already
-    // materialized — the |E|-sized dst-hash checkpoint would otherwise
-    // pin block-manager storage for the life of a long-lived driver.
-    var edgesByDst: DataFrame = null
-    var labelsCp: DataFrame = null
+    // The per-round neighborhood join is keyed on dst. ONE exchange
+    // lands both the dedup and that layout (r16): repartition(dst)
+    // satisfies dropDuplicates' (src, dst)-clustered distribution
+    // ({dst} ⊆ {src, dst} — the KCore prep precedent), so the dedup
+    // aggregate runs exchange-free in the dst-hash layout the
+    // checkpoint keeps. The former shape paid distinct's (src, dst)
+    // exchange + persist + count + a SECOND full-|E| exchange inside
+    // checkpointByKey — two passes and a cache write over the raw
+    // pair plan for the same materialized table. The build job runs
+    // AQE-off (checkpointKeepingLayout mechanics), but it only reads
+    // the staged raw pairs: the caller's producer plan was planned
+    // under the session's AQE by the staging checkpoint above.
+    val edgesByDst = st(graft.core.Partitioning.checkpointKeepingLayout(
+      edgesPlan.repartition(col("dst")).dropDuplicates("src", "dst")))
+    // edge set materialized — the raw pairs and the input pair plan
+    // are consumed now (see @param pairs)
+    st.drop(cleaned)
+    Lineage.release(pairs)
+
+    // Per-round checkpoints build under AQE, deliberately FORGETTING
+    // the label layout: the round's build job contains the edge join,
+    // the shortcut double self-join, and the old-label join, and an
+    // AQE-off build (checkpointKeepingLayout) would run ALL of them
+    // without runtime broadcast upgrades or coalescing — measured at
+    // sf1 (A/B, this round): q97 3.3-3.7 s with AQE-on rounds vs
+    // 4.7-5.7 s with layout-preserving rounds, q95 same direction.
+    // The |V|-row label shuffle a lost layout costs per round is far
+    // cheaper than the lost AQE planning inside the round. The |E|
+    // table keeps its one-time dst-hash layout above — that side of
+    // the neighborhood join never re-shuffles either way.
+    var labelsCp = st(
+      edgesByDst.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label")).localCheckpoint(true))
+    var labels = rewrap(labelsCp)
     var iter = 0
     var done = false
-    // hoisted so the failure path can release the round in flight — a
-    // mid-round exception must not pin superseded blocks in a
-    // long-lived driver
-    var propagatedCp: DataFrame = null
-    try {
-      // The per-round neighborhood join is keyed on dst. ONE exchange
-      // lands both the dedup and that layout (r16): repartition(dst)
-      // satisfies dropDuplicates' (src, dst)-clustered distribution
-      // ({dst} ⊆ {src, dst} — the KCore prep precedent), so the dedup
-      // aggregate runs exchange-free in the dst-hash layout the
-      // checkpoint keeps. The former shape paid distinct's (src, dst)
-      // exchange + persist + count + a SECOND full-|E| exchange inside
-      // checkpointByKey — two passes and a cache write over the raw
-      // pair plan for the same materialized table. The build job runs
-      // AQE-off (checkpointKeepingLayout mechanics), but it only reads
-      // the staged raw pairs: the caller's producer plan was planned
-      // under the session's AQE by the staging checkpoint above.
-      edgesByDst = graft.core.Partitioning.checkpointKeepingLayout(
-        edgesPlan.repartition(col("dst")).dropDuplicates("src", "dst"))
-      // edge set materialized — the raw pairs and the input pair plan
-      // are consumed now (see @param pairs)
-      Lineage.release(cleaned)
-      Lineage.release(pairs)
 
-      // Per-round checkpoints build under AQE, deliberately FORGETTING
-      // the label layout: the round's build job contains the edge join,
-      // the shortcut double self-join, and the old-label join, and an
-      // AQE-off build (checkpointKeepingLayout) would run ALL of them
-      // without runtime broadcast upgrades or coalescing — measured at
-      // sf1 (A/B, this round): q97 3.3-3.7 s with AQE-on rounds vs
-      // 4.7-5.7 s with layout-preserving rounds, q95 same direction.
-      // The |V|-row label shuffle a lost layout costs per round is far
-      // cheaper than the lost AQE planning inside the round. The |E|
-      // table keeps its one-time dst-hash layout above — that side of
-      // the neighborhood join never re-shuffles either way.
-      labelsCp =
-        edgesByDst.select(col("src").as("node")).distinct()
-          .select(col("node"), col("node").as("label")).localCheckpoint(true)
-      var labels = rewrap(labelsCp)
-
-      while (!done && iter < maxIter) {
-        // min label over the closed neighborhood (self ∪ neighbors)
-        val nbrMin = edgesByDst
-          .join(labels.select(col("node").as("dst"), col("label").as("dst_label")), Seq("dst"))
-          .groupBy(col("src")).agg(min(col("dst_label")).as("nbr_label"))
-          .select(col("src").as("node"), col("nbr_label"))
-        // checkpointed: the shortcut step below self-joins this twice, and
-        // Spark's self-join deduplication clones the subtree per side — an
-        // un-materialized propagate would re-run the edge join 4×
-        propagatedCp = labels
-          .join(nbrMin, Seq("node"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-          .localCheckpoint(true)
-        val propagated = rewrap(propagatedCp)
-        // pointer jumping: follow the label one hop (label := label(label));
-        // labels only ever decrease, so taking the hop unconditionally is
-        // safe and at least doubles the distance already covered. Two
-        // jumps per round — each is a self-join of the LABEL table (tiny
-        // next to the edge set) inside the same lineage, no extra action —
-        // so per round the covered distance roughly quadruples.
-        def shortcut(t: DataFrame): DataFrame = t
-          .join(t.select(col("node").as("label"), col("label").as("hop_label")),
-            Seq("label"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("hop_label"), col("label"))).as("label"))
-        // carry the previous label through the checkpoint so convergence is
-        // a filter on materialized data, not another join
-        val nextCp =
-          shortcut(shortcut(propagated))
-            .join(labels.select(col("node"), col("label").as("old_label")), Seq("node"))
-            .localCheckpoint(true)
-        // the eager checkpoint above materialized this round, so the
-        // round's scratch and the superseded label table are dead —
-        // release them NOW, not at loop exit (rounds × |V| blocks
-        // otherwise pile up for the whole solve; observed as the q97/q95
-        // bench leak counter)
-        Lineage.release(propagatedCp)
-        propagatedCp = null
-        Lineage.release(labelsCp)
-        labelsCp = nextCp
-        val next = rewrap(nextCp)
-        val changed = next.where(col("label") =!= col("old_label")).limit(1).count() > 0
-        labels = next.drop("old_label")
-        done = !changed
-        iter += 1
-      }
-      require(done, s"connectedComponents did not converge in $maxIter rounds " +
-        "(pathological chain graph — use a log-round decomposition at this scale)")
-    } catch {
-      case t: Throwable =>
-        Lineage.release(cleaned)
-        if (edgesByDst != null) Lineage.release(edgesByDst)
-        if (propagatedCp != null) Lineage.release(propagatedCp)
-        if (labelsCp != null) Lineage.release(labelsCp)
-        throw t
+    while (!done && iter < maxIter) {
+      // min label over the closed neighborhood (self ∪ neighbors)
+      val nbrMin = edgesByDst
+        .join(labels.select(col("node").as("dst"), col("label").as("dst_label")), Seq("dst"))
+        .groupBy(col("src")).agg(min(col("dst_label")).as("nbr_label"))
+        .select(col("src").as("node"), col("nbr_label"))
+      // checkpointed: the shortcut step below self-joins this twice, and
+      // Spark's self-join deduplication clones the subtree per side — an
+      // un-materialized propagate would re-run the edge join 4×
+      val propagatedCp = st(labels
+        .join(nbrMin, Seq("node"), "left")
+        .select(col("node"),
+          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
+        .localCheckpoint(true))
+      val propagated = rewrap(propagatedCp)
+      // pointer jumping: follow the label one hop (label := label(label));
+      // labels only ever decrease, so taking the hop unconditionally is
+      // safe and at least doubles the distance already covered. Two
+      // jumps per round — each is a self-join of the LABEL table (tiny
+      // next to the edge set) inside the same lineage, no extra action —
+      // so per round the covered distance roughly quadruples.
+      def shortcut(t: DataFrame): DataFrame = t
+        .join(t.select(col("node").as("label"), col("label").as("hop_label")),
+          Seq("label"), "left")
+        .select(col("node"),
+          least(col("label"), coalesce(col("hop_label"), col("label"))).as("label"))
+      // carry the previous label through the checkpoint so convergence is
+      // a filter on materialized data, not another join
+      val nextCp = st(
+        shortcut(shortcut(propagated))
+          .join(labels.select(col("node"), col("label").as("old_label")), Seq("node"))
+          .localCheckpoint(true))
+      // the eager checkpoint above materialized this round, so the
+      // round's scratch and the superseded label table are dead —
+      // release them NOW, not at loop exit (rounds × |V| blocks
+      // otherwise pile up for the whole solve; observed as the q97/q95
+      // bench leak counter)
+      st.drop(propagatedCp)
+      st.drop(labelsCp)
+      labelsCp = nextCp
+      val next = rewrap(nextCp)
+      val changed = next.where(col("label") =!= col("old_label")).limit(1).count() > 0
+      labels = next.drop("old_label")
+      done = !changed
+      iter += 1
     }
-    Lineage.release(edgesByDst)
+    require(done, s"connectedComponents did not converge in $maxIter rounds " +
+      "(pathological chain graph — use a log-round decomposition at this scale)")
     labelsCp.select(col("node"), col("label").as("component"))
   }
 

@@ -13,13 +13,9 @@ import org.apache.spark.storage.StorageLevel
   * assignments returns silently wrong neighbors.
   *
   * The unit of atomicity is therefore the WHOLE index directory, not
-  * one table: components write into `<dir>__staging`, then the staged
-  * swap (the `load.Load.replaceTable` discipline — back up the old
-  * directory by rename, rename staging in, restore on failure) makes
-  * the complete index visible in one rename. Same crash windows, same
-  * guard: a backup with no destination means a prior swap's restore
-  * failed and holds the only copy — refuse and ask for manual
-  * recovery rather than clearing it.
+  * one table: components write into `<dir>__staging`, then
+  * [[graft.load.Load.stagedSwap]] makes the complete index visible in
+  * one rename.
   *
   * Codebooks (driver-side float arrays) ride a parquet table of
   * (subspace, code, centroid-vector) rows plus a one-row meta table;
@@ -27,35 +23,6 @@ import org.apache.spark.storage.StorageLevel
   * BIT-IDENTICALLY to the built one (IndexStoreSpec pins this).
   */
 object IndexStore {
-
-  /** Atomic publish of everything `write` stages into the directory. */
-  private def swapInto(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
-    val dest = new Path(dir)
-    val staging = new Path(dir + "__staging")
-    val backup = new Path(dir + "__old")
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(backup) && !fs.exists(dest))
-      throw new IllegalStateException(
-        s"index dir $dir is missing but backup $backup exists — a prior swap " +
-          "failed and was not restored; recover manually before saving")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    write(staging.toString)
-    if (fs.exists(backup)) fs.delete(backup, true)
-    val hadPrev = fs.exists(dest)
-    if (hadPrev && !fs.rename(dest, backup))
-      throw new java.io.IOException(s"backup rename $dest -> $backup failed")
-    try {
-      if (!fs.rename(staging, dest))
-        throw new java.io.IOException(s"rename $staging -> $dest returned false")
-    } catch {
-      case e: Throwable =>
-        if (hadPrev && !fs.rename(backup, dest))
-          throw new java.io.IOException(
-            s"CRITICAL: swap failed AND restore $backup -> $dest failed", e)
-        throw e
-    }
-    if (hadPrev) fs.delete(backup, true)
-  }
 
   private def readPart(spark: SparkSession, dir: String, part: String,
       expectCols: Seq[String]): DataFrame = {
@@ -169,7 +136,7 @@ object IndexStore {
     rows.write.mode("overwrite").parquet(staging.toString)
     // footer-only count of what was just staged (no column reads)
     val n = spark.read.parquet(staging.toString).count()
-    writeSidecars(spark, staging.toString, Map(SegCountFile -> n.toString))
+    writeSidecars(spark, staging, Map(SegCountFile -> n.toString))
     if (fs.exists(dest)) fs.delete(dest, true) // window-a replay debris
     if (!fs.rename(staging, dest))
       throw new java.io.IOException(s"segment commit rename $staging -> $dest failed")
@@ -234,7 +201,7 @@ object IndexStore {
     val base = readSidecar(spark, dir, cacheName).map(_.trim.toLong).getOrElse {
       val baseFiles = v.baseFiles.map(_.toString)
       val n = if (baseFiles.isEmpty) 0L else spark.read.parquet(baseFiles: _*).count()
-      writeSidecars(spark, root.toString, Map(cacheName -> n.toString))
+      writeSidecars(spark, root, Map(cacheName -> n.toString))
       n
     }
     (base, streamed)
@@ -298,7 +265,7 @@ object IndexStore {
     if (v.fs.exists(staging)) v.fs.delete(staging, true)
     spark.read.parquet(folded.map(_.toString): _*)
       .write.mode("overwrite").parquet(staging.toString)
-    writeSidecars(spark, staging.toString, Map(SegCountFile -> streamed.toString))
+    writeSidecars(spark, staging, Map(SegCountFile -> streamed.toString))
     val dest = new Path(v.comp, s"$prefix$through")
     if (v.fs.exists(dest)) v.fs.delete(dest, true)
     if (!v.fs.rename(staging, dest))
@@ -392,14 +359,14 @@ object IndexStore {
     */
   def saveIvf(spark: SparkSession, index: (DataFrame, DataFrame), dir: String,
       sidecars: Map[String, String] = Map.empty): Unit =
-    swapInto(spark, dir) { staging =>
+    graft.load.Load.stagedSwap(spark, dir) { staging =>
       index._1.write.parquet(s"$staging/centroids")
       index._2.write.parquet(s"$staging/assignments")
       writeSidecars(spark, staging, sidecars)
     }
 
   private def writeSidecars(
-      spark: SparkSession, staging: String, sidecars: Map[String, String]): Unit =
+      spark: SparkSession, staging: Path, sidecars: Map[String, String]): Unit =
     sidecars.foreach { case (name, content) =>
       require(name.startsWith("_"),
         s"sidecar '$name' must be underscore-prefixed (invisible to Spark readers)")
@@ -447,7 +414,7 @@ object IndexStore {
     * directory swap: a half-written edge table must never serve.
     */
   def saveKnnGraph(spark: SparkSession, graph: DataFrame, dir: String): Unit =
-    swapInto(spark, dir) { staging =>
+    graft.load.Load.stagedSwap(spark, dir) { staging =>
       graph.select("query_id", "neighbor_id", "sim").write.parquet(s"$staging/edges")
     }
 
@@ -467,7 +434,7 @@ object IndexStore {
     val cents = ix.cb.cents.zipWithIndex.flatMap { case (codes, j) =>
       codes.zipWithIndex.map { case (vec, c) => (j, c, vec.toSeq) }
     }.toSeq.toDF("j", "c", "cvec")
-    swapInto(spark, dir) { staging =>
+    graft.load.Load.stagedSwap(spark, dir) { staging =>
       ix.centroids.write.parquet(s"$staging/centroids")
       ix.coded.write.parquet(s"$staging/coded")
       meta.write.parquet(s"$staging/cb_meta")

@@ -37,10 +37,6 @@ import org.apache.spark.sql.functions._
   *  - Peel sets ride broadcasts under the same executor-sized gate as
   *    PageRank's rank table; above it the round falls back to shuffle
   *    joins (correct, layout-suboptimal, never hit by bounded peels).
-  *  - Every round releases the previous round's localCheckpoint blocks
-  *    once the next has materialized, and the |E|-sized arc blocks are
-  *    released before returning — a long-lived driver keeps the small
-  *    answer, not rounds × |E|.
   *
   * Cites the peeling algorithm of Matula-Beck (1983) as described in
   * public literature; no reference-engine counterpart (the reference
@@ -98,12 +94,6 @@ object KCore {
     }.toSeq
   }
 
-  /** Free a round's localCheckpoint blocks once the next round has
-    * materialized (see [[Lineage.release]] — after this the frame is
-    * unrecomputable, so only frames no live plan references go in).
-    */
-  private def release(df: DataFrame): Unit = Lineage.release(df)
-
   /** Vertices of the k-core of the undirected graph given as `pairs`
     * (any orientation, duplicates fine — canonicalized and deduped
     * internally; self-loops dropped). Returns (vertex, core_degree):
@@ -117,29 +107,33 @@ object KCore {
       pairs: DataFrame, aCol: String, bCol: String, k: Int,
       maxIter: Int = 50, driverMaxRows: Long = DriverMaxRows): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // LAZY localCheckpoint: the driver-lane gate below and (over the
-    // gate) the prep both read THIS frame — one LogicalRDD, one shuffle
-    // lineage — so the caller's producer plan evaluates its map stages
-    // once no matter which lane runs. Two separate Dataset plans
-    // (gate vs prep) would each instantiate their own exchange and
-    // the over-gate lane would pay the producer twice.
-    val cleaned = pairs
-      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .localCheckpoint(false)
+    Lineage.staging { st =>
+      // LAZY localCheckpoint: the driver-lane gate below and (over the
+      // gate) the prep both read THIS frame — one LogicalRDD, one shuffle
+      // lineage — so the caller's producer plan evaluates its map stages
+      // once no matter which lane runs. Two separate Dataset plans
+      // (gate vs prep) would each instantiate their own exchange and
+      // the over-gate lane would pay the producer twice.
+      val cleaned = st(pairs
+        .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+        .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
+        .localCheckpoint(false))
 
-    // Small-graph fast path: the cascade dedups and direction-doubles on
-    // the driver, skipping the distributed prep (solo q144 at sf0.1:
-    // 4.7 → 3.5 s)
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    graft.core.DriverLane.collectIfAtMost(cleaned.as[(Long, Long)], driverMaxRows) match {
-      case Some(raw) =>
-        release(cleaned)
-        return spark.createDataset(driverPeel(raw, k)).toDF("vertex", "core_degree")
-      case None =>
+      // Small-graph fast path: the cascade dedups and direction-doubles on
+      // the driver, skipping the distributed prep (solo q144 at sf0.1:
+      // 4.7 → 3.5 s)
+      val spark = pairs.sparkSession
+      import spark.implicits._
+      graft.core.DriverLane.collectIfAtMost(cleaned.as[(Long, Long)], driverMaxRows) match {
+        case Some(raw) =>
+          spark.createDataset(driverPeel(raw, k)).toDF("vertex", "core_degree")
+        case None => peelDistributed(st, cleaned, k, maxIter)
+      }
     }
+  }
 
+  private def peelDistributed(
+      st: Lineage.Staging, cleaned: DataFrame, k: Int, maxIter: Int): DataFrame = {
     // over the gate: pay the normalization the distributed rounds need.
     // Both directions explode in ONE pass over the input (a union of
     // the pair pipeline with its swap would evaluate it twice), then
@@ -149,72 +143,53 @@ object KCore {
     // checkpoint forgets the u-hash layout the prep shuffle landed, and
     // the "exchange-free" claims below silently regress to a full |E|
     // re-shuffle per round (see core.Partitioning.checkpointByKey).
-    // finally: the raw-pair blocks are superseded by the arc layout on
-    // success, and must not strand block-manager storage on failure
-    val arcs =
-      try graft.core.Partitioning.checkpointKeepingLayout(cleaned
-        .select(explode(array(
-          struct(col("a").as("u"), col("b").as("v")),
-          struct(col("b").as("u"), col("a").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .repartition(col("u"))
-        .dropDuplicates("u", "v"))
-      finally release(cleaned)
+    val arcs = st(graft.core.Partitioning.checkpointKeepingLayout(cleaned
+      .select(explode(array(
+        struct(col("a").as("u"), col("b").as("v")),
+        struct(col("b").as("u"), col("a").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+      .repartition(col("u"))
+      .dropDuplicates("u", "v")))
+    st.drop(cleaned) // superseded by the arc layout
 
+    // initial degrees: exchange-free in the arc layout, and the layout
+    // (u-hash) rides through the checkpoint so every round's joins
+    // against deg stay exchange-free too
+    var deg = st(graft.core.Partitioning.checkpointKeepingLayout(
+      arcs.groupBy(col("u")).agg(count(lit(1)).as("deg"))))
     var iter = 0
     var done = false
-    // deg/peel are hoisted so the failure path below can release the
-    // round in flight; a failed INIT job (the degree aggregation), non-
-    // convergence, and mid-round exceptions must all free arcs/deg/peel
-    // or a long-lived driver pins rounds x |E| blocks
-    var deg: DataFrame = null
-    var peel: DataFrame = null
-    try {
-      // initial degrees: exchange-free in the arc layout, and the layout
-      // (u-hash) rides through the checkpoint so every round's joins
-      // against deg stay exchange-free too
-      deg = graft.core.Partitioning.checkpointKeepingLayout(
-        arcs.groupBy(col("u")).agg(count(lit(1)).as("deg")))
-      while (!done && iter < maxIter) {
-        // layout-preserving: peel inherits deg's u-hash (alias-tracked
-        // through the rename), so the non-broadcast rounds' anti/semi
-        // joins against it are exchange-free on both sides
-        peel = graft.core.Partitioning.checkpointKeepingLayout(
-          deg.where(col("deg") < k).select(col("u").as("peel")))
-        val peelCount = peel.count()
-        if (peelCount == 0) { done = true; release(peel); peel = null }
-        else {
-          val small = peelCount <= BroadcastMaxPeel
-          def side(df: DataFrame): DataFrame =
-            if (small) broadcast(df) else df.hint("shuffle_hash")
-          // per-u loss to this round's peel: map-side semi-join keeps the
-          // arc layout, so the aggregation needs no exchange
-          val loss = arcs
-            .join(side(peel.select(col("peel").as("peel_v"))),
-              arcs("v") === col("peel_v"), "left_semi")
-            .groupBy(col("u")).agg(count(lit(1)).as("loss"))
-          val next = graft.core.Partitioning.checkpointKeepingLayout(deg
-            .join(side(peel), deg("u") === peel("peel"), "left_anti")
-            .join(loss, Seq("u"), "left")
-            .select(col("u"), (col("deg") - coalesce(col("loss"), lit(0L))).as("deg")))
-          release(deg)
-          release(peel)
-          peel = null
-          deg = next
-          iter += 1
-        }
+    while (!done && iter < maxIter) {
+      // layout-preserving: peel inherits deg's u-hash (alias-tracked
+      // through the rename), so the non-broadcast rounds' anti/semi
+      // joins against it are exchange-free on both sides
+      val peel = st(graft.core.Partitioning.checkpointKeepingLayout(
+        deg.where(col("deg") < k).select(col("u").as("peel"))))
+      val peelCount = peel.count()
+      if (peelCount == 0) done = true
+      else {
+        val small = peelCount <= BroadcastMaxPeel
+        def side(df: DataFrame): DataFrame =
+          if (small) broadcast(df) else df.hint("shuffle_hash")
+        // per-u loss to this round's peel: map-side semi-join keeps the
+        // arc layout, so the aggregation needs no exchange
+        val loss = arcs
+          .join(side(peel.select(col("peel").as("peel_v"))),
+            arcs("v") === col("peel_v"), "left_semi")
+          .groupBy(col("u")).agg(count(lit(1)).as("loss"))
+        val next = st(graft.core.Partitioning.checkpointKeepingLayout(deg
+          .join(side(peel), deg("u") === peel("peel"), "left_anti")
+          .join(loss, Seq("u"), "left")
+          .select(col("u"), (col("deg") - coalesce(col("loss"), lit(0L))).as("deg"))))
+        st.drop(deg)
+        deg = next
+        iter += 1
       }
-      require(done, s"k-core peeling did not converge in $maxIter rounds")
-    } catch {
-      case t: Throwable =>
-        release(arcs)
-        if (deg != null) release(deg)
-        if (peel != null) release(peel)
-        throw t
+      st.drop(peel)
     }
-    // the maintained table is already the core degrees; free the
-    // |E|-sized arc blocks before handing the small answer back
-    release(arcs)
+    require(done, s"k-core peeling did not converge in $maxIter rounds")
+    // the maintained table is already the core degrees; the scope frees
+    // the |E|-sized arc blocks, the answer keeps only deg's
     deg.select(col("u").as("vertex"), col("deg").as("core_degree"))
   }
 }

@@ -164,11 +164,11 @@ object LangId {
     // doc_id-hash layout before the checkpoint: the per-iteration
     // margin aggregate and err-join reuse it exchange-free (the
     // QualityClassifier r14 shape)
-    val feat = features(docs, nBuckets, gram, idCol, textCol)
-      .join(labeled, "doc_id")
-      .repartition(col("doc_id"))
-      .localCheckpoint()
-    try {
+    Lineage.staging { st =>
+      val feat = st(features(docs, nBuckets, gram, idCol, textCol)
+        .join(labeled, "doc_id")
+        .repartition(col("doc_id"))
+        .localCheckpoint())
       val nDocs = labeled.count()
       require(nDocs > 0, "cannot train on an empty corpus")
       // typed: one-pass tuple array, no transient Array[Row] (advice r14)
@@ -180,7 +180,7 @@ object LangId {
         case None => trainDistributed(feat, nBuckets, k, iters, lr, nDocs)
       }
       Model(nBuckets, gram, classes, weights)
-    } finally Lineage.release(feat)
+    }
   }
 
   private def trainDistributed(

@@ -76,9 +76,9 @@ object PageRank {
     *   pass a recomputable plan or re-checkpoint.
     */
   def ranks(arcs: DataFrame, iters: Int,
-      broadcastMaxVertices: Long = BroadcastMaxVertices): DataFrame = {
+      broadcastMaxVertices: Long = BroadcastMaxVertices): DataFrame = Lineage.staging { st =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val a0 = arcs.select(col("src"), col("dst")).localCheckpoint()
+    val a0 = st(arcs.select(col("src"), col("dst")).localCheckpoint())
     // input CONSUMED (the Components contract): a0 is eager, so any
     // checkpoint blocks the caller's arc plan staged (q106 stages its
     // pair expansion) are now superseded — nothing downstream reads
@@ -95,14 +95,14 @@ object PageRank {
     // checkpointKeepingLayout: the groupBy lands hash(vertex), which the
     // large-|V| branch's per-round rank-update joins reuse (the small
     // branch ignores the layout — it broadcasts).
-    val vd = graft.core.Partitioning.checkpointKeepingLayout(
+    val vd = st(graft.core.Partitioning.checkpointKeepingLayout(
       a0.select(explode(array(
           struct(col("src").as("vertex"), lit(1L).as("c")),
           struct(col("dst").as("vertex"), lit(0L).as("c")))).as("x"))
         .select(col("x.vertex").as("vertex"), col("x.c").as("c"))
         .groupBy(col("vertex")).agg(sum(col("c")).as("ds"))
         .select(col("vertex"),
-          when(col("ds") > 0, col("ds")).otherwise(lit(null).cast("long")).as("deg")))
+          when(col("ds") > 0, col("ds")).otherwise(lit(null).cast("long")).as("deg"))))
     // |V| is needed for the teleport term anyway — the same count (one
     // cheap job over the checkpointed |V|-row table) gates the
     // broadcast-vs-shuffle branch for free.
@@ -128,8 +128,8 @@ object PageRank {
     // formulation silently lost the layout and every iteration
     // re-shuffled the arc table; see core.Partitioning.checkpointByKey).
     val a = if (small) a0 else {
-      val r = graft.core.Partitioning.checkpointByKey(a0, col("src"))
-      Lineage.release(a0) // superseded by the src-hash layout
+      val r = st(graft.core.Partitioning.checkpointByKey(a0, col("src")))
+      st.drop(a0) // superseded by the src-hash layout
       r
     }
     def attach(df: DataFrame): DataFrame =

@@ -147,11 +147,11 @@ object QualityClassifier {
     // NO exchange — the only per-iteration shuffle left is the bucket
     // gradient aggregate, map-side combined down to <= 1025 rows per
     // partition (round-13 verdict #5: was 3 shuffles/iter, now 1).
-    val feat = features(docs, nBuckets, idCol, textCol)
-      .join(labels, "doc_id")
-      .repartition(col("doc_id"))
-      .localCheckpoint()
-    try {
+    Lineage.staging { st =>
+      val feat = st(features(docs, nBuckets, idCol, textCol)
+        .join(labels, "doc_id")
+        .repartition(col("doc_id"))
+        .localCheckpoint())
       val nDocs = labels.count()
       require(nDocs > 0, "cannot train on an empty corpus")
       // typed: one-pass tuple array, no transient Array[Row] (advice r14)
@@ -163,7 +163,7 @@ object QualityClassifier {
         case None => trainDistributed(feat, nBuckets, iters, lr, nDocs)
       }
       Model(nBuckets, w)
-    } finally Lineage.release(feat)
+    }
   }
 
   private def trainDistributed(

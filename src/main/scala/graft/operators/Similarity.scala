@@ -193,7 +193,7 @@ object Similarity {
     * edges re-score to bit-identical sims (same prep/dot), so the
     * in-buffer (sim, id) dedup of topKDistinct merges them exactly.
     * Each round's graph is eagerly checkpointed and its predecessor
-    * released (the graphSearch staging discipline). At extreme N
+    * released. At extreme N
     * (≥10⁹·deg² proposal rows) a production build would sample
     * proposals per node (NN-descent's ρ < 1) — not needed at any
     * measured scale here.
@@ -216,19 +216,16 @@ object Similarity {
     val seed =
       topKByQuery(symCandidates(df, idCol, vecCol, tables, resolveBits(df, bits)), deg)
     if (refineRounds == 0) seed
-    else {
-      val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      def stage(d: DataFrame): DataFrame = {
-        val cp = d.localCheckpoint(true); staged += cp; cp
-      }
-      try {
+    else Lineage.staging { st =>
+        def stage(d: DataFrame): DataFrame = st(d.localCheckpoint(true))
+        st(seed)
         val c = stage(prep(df, idCol, vecCol))
         var g = stage(seed.select(col("query_id"), col("neighbor_id"), col("sim")))
         // the seed build checkpointed its LSH bucket table internally;
         // the staged copy above supersedes it — release the seed plan
         // NOW or the bucket blocks are orphaned (the q55/q36 rebase
         // shape; observed as bench leaks)
-        Lineage.release(seed)
+        st.drop(seed)
         var r = 0
         while (r < refineRounds) {
           // undirected adjacency: in-edges carry as much "is likely my
@@ -249,23 +246,17 @@ object Similarity {
             .join(c.select(col("vid").as("query_id"), col("v").as("qv")), "query_id")
             .select(col("query_id"), col("neighbor_id"),
               dot(col("qv"), col("nv")).as("sim"))
-          g = stage(topKByQuery(g.unionAll(scored), deg)
+          val next = stage(topKByQuery(g.unionAll(scored), deg)
             .select(col("query_id"), col("neighbor_id"), col("sim")))
+          st.drop(g)
+          g = next
           r += 1
         }
         // final rank pass (cheap — N·k rows) restores the seed's output
-        // contract; the returned plan references only the last
-        // checkpoint, which the caller's Lineage.release frees
-        staged.dropRight(1).foreach(Lineage.release(_))
+        // contract
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("sim").desc, col("neighbor_id"))
         g.withColumn("rank", row_number().over(w).cast("long"))
-      } catch {
-        case e: Throwable =>
-          staged.foreach(Lineage.release(_))
-          Lineage.release(seed) // idempotent; the bucket table is eager
-          throw e
-      }
     }
   }
 
@@ -389,8 +380,7 @@ object Similarity {
     * Scale shape: the per-round frontier is ≤ |queries|·beam·degree
     * rows — broadcast against the STATIONARY graph and corpus tables
     * (neither ever shuffles; the corpus join is refineExact's shape).
-    * Visited sets ride eager checkpoints, released per round; a
-    * failure releases everything staged (the LabelProp discipline).
+    * Visited sets ride eager checkpoints, released per round.
     * Determinism: all ranks tie-break on neighbor_id, so results are
     * reproducible run to run (the oracle counts on it).
     */
@@ -402,11 +392,8 @@ object Similarity {
       s"need beam >= k >= 1 (or beam = 0 = auto), got beam=$beam k=$k")
     require(rounds >= 0 && entryPoints >= 0,
       s"rounds/entryPoints must be >= 0 (0 = auto-size by corpus), got $rounds/$entryPoints")
-    // every eager checkpoint registers here; the failure path releases
-    // them all (a half-run search must not strand block-manager storage)
-    val staged = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def stage(df: DataFrame): DataFrame = { val cp = df.localCheckpoint(true); staged += cp; cp }
-    try {
+    Lineage.staging { st =>
+      def stage(df: DataFrame): DataFrame = st(df.localCheckpoint(true))
       val c = stage(prep(corpus, idCol, vecCol))
       val q = stage(prep(queries, idCol, vecCol)
         .select(col("vid").as("query_id"), col("v").as("qv")))
@@ -453,17 +440,13 @@ object Similarity {
           .select(col("query_id"), col("_dst").as("neighbor_id")).distinct()
           .join(visited.select(col("query_id"), col("neighbor_id")),
             Seq("query_id", "neighbor_id"), "left_anti")
-        visited = stage(visited.unionAll(score(expand)))
+        val next = stage(visited.unionAll(score(expand)))
+        st.drop(visited)
+        visited = next
         r += 1
       }
-      // release everything staged EXCEPT the final visited set — the
-      // returned plan references that checkpoint, so the caller's
-      // Lineage.release(result) frees it
-      staged.dropRight(1).foreach(Lineage.release(_))
       visited.withColumn("rank", row_number().over(w).cast("long"))
         .where(col("rank") <= k)
-    } catch {
-      case e: Throwable => staged.foreach(Lineage.release(_)); throw e
     }
   }
 

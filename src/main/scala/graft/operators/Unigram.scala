@@ -283,10 +283,9 @@ object Unigram extends org.apache.spark.internal.Logging {
     val allWords = docs
       .select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    val wordFreq = (if (freqFloor > 1L) allWords.where(col("freq") >= freqFloor)
-                    else allWords)
-      .localCheckpoint()
-    try {
+    Lineage.staging { st =>
+      val wordFreq = st((if (freqFloor > 1L) allWords.where(col("freq") >= freqFloor)
+                         else allWords).localCheckpoint())
       import wordFreq.sparkSession.implicits._
       val wordsInMemory =
         graft.core.DriverLane.collectIfAtMost(wordFreq.as[(String, Long)], driverMaxRows)
@@ -296,10 +295,10 @@ object Unigram extends org.apache.spark.internal.Logging {
       // ---- seed: distributed substring mass in exact longs — one
       // explode+groupBy over the VOCABULARY (not the corpus). substr is
       // code-point based on both sides of the oracle fence. ----
-      val pieceMass = wordFreq
+      val pieceMass = st(wordFreq
         .select(explode(substringsCol(col("w"), maxPieceLen)).as("p"), col("freq"))
         .groupBy(col("p")).agg(sum(col("freq")).as("mass"))
-        .localCheckpoint()
+        .localCheckpoint())
       val chars = pieceMass
         .where(length(col("p")) === 1 ||
           // one astral code point is two UTF-16 units but length()
@@ -316,7 +315,7 @@ object Unigram extends org.apache.spark.internal.Logging {
         .orderBy(col("mass").desc, col("p"))
         .limit(math.max(0, seedCap - chars.length))
         .collect().map(r => (r.getString(0), r.getLong(1)))
-      Lineage.release(pieceMass)
+      st.drop(pieceMass)
       // canonical piece order: single code points (sorted), then multi
       // (sorted) — stable across lanes and runs
       val seed = (chars ++ multi.sortBy(_._1)).distinct
@@ -350,7 +349,7 @@ object Unigram extends org.apache.spark.internal.Logging {
         round += 1
       }
       model
-    } finally Lineage.release(wordFreq)
+    }
   }
 
   /** All substrings of `w` up to `maxLen` code points, as a Column

@@ -58,7 +58,7 @@ import graft.operators.SubstringDedup
   *       size-ratio trigger — each major at least doubles base, so
   *       majors are geometrically spaced and total rewrite work is
   *       linear in ingested bytes), everything live folds into
-  *       `base/` through [[Load.replaceTable]]'s staged swap with
+  *       `base/` through [[Load.stagedSwap]] with
   *       `_compacted_through` recording the highest folded batch id.
   *    Parts below a newer fold are DEAD by rule the instant the
   *    commit rename/swap lands — deleting them afterwards is pure
@@ -410,14 +410,14 @@ object SubstringIngest extends Logging {
     Load.withLock(spark, indexDir, "substringIngest bootstrap") {
       val pre = readStore(spark, indexDir)
       val through = math.max(appliedBatch, if (pre.exists) pre.applied else -1L)
-      Load.replaceTable(spark, SubstringDedup.gramIndex(docs, k), s"$indexDir/base",
-        decorateStaging = { staging =>
-          val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          writeLongFile(fs, new Path(staging, CompactedThroughFile), through)
-          writeBloom(fs, new Path(staging, IdsBloomFile), bloom)
-          writeLongFile(fs, new Path(staging, IdsNFile), nIds)
-          writeLongFile(fs, new Path(staging, IdsCapFile), bloomExpectedItems)
-        }).get
+      Load.stagedSwap(spark, s"$indexDir/base") { staging =>
+        SubstringDedup.gramIndex(docs, k).write.parquet(staging.toString)
+        val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        writeLongFile(fs, new Path(staging, CompactedThroughFile), through)
+        writeBloom(fs, new Path(staging, IdsBloomFile), bloom)
+        writeLongFile(fs, new Path(staging, IdsNFile), nIds)
+        writeLongFile(fs, new Path(staging, IdsCapFile), bloomExpectedItems)
+      }
       val post = readStore(spark, indexDir)
       // every pre-existing part is dead by rule now (compactedThrough
       // covers all their ids; legacy root files die once base exists)
@@ -849,12 +849,11 @@ object SubstringIngest extends Logging {
     val bloomPaths = parts.flatMap(_.bloomAt)
     val guard = mergeGuard(bloomPaths.flatMap(p => readGuard(st.fs, p.getParent)))
     val incomplete = st.bloomIncomplete || parts.exists(_.bloomAt.isEmpty)
-    Load.replaceTable(spark, mergeRows(readLive(spark, st)), s"$indexDir/base",
-      decorateStaging = { staging =>
-        val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        writeLongFile(fs, new Path(staging, CompactedThroughFile), through)
-        if (guard.nonEmpty) writeGuard(fs, staging, guard)
-      }).get
+    Load.stagedSwap(spark, s"$indexDir/base") { staging =>
+      mergeRows(readLive(spark, st)).write.parquet(staging.toString)
+      writeLongFile(st.fs, new Path(staging, CompactedThroughFile), through)
+      if (guard.nonEmpty) writeGuard(st.fs, staging, guard)
+    }
     if (incomplete)
       writeLongFile(st.fs, new Path(st.dir, BloomIncompleteFile), 1L)
     // the swap made these dead by rule; immediate deletion only in

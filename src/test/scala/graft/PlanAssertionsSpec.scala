@@ -8,6 +8,7 @@ import graft.SparkTestBase
   * would silently cost orders of magnitude at the 100 TB design point.
   */
 class PlanAssertionsSpec extends SparkTestBase {
+  import PlanAssertionsSpec.ensureExchanges
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -302,9 +303,6 @@ class PlanAssertionsSpec extends SparkTestBase {
     }
   }
 
-  private def ensureExchanges(p: String): Int =
-    "Exchange hashpartitioning[^\\n]*ENSURE_REQUIREMENTS".r.findAllIn(p).size
-
   test("LSH bucket self-join: staged once, shuffled under AQE (skew-splittable), no cartesian") {
     withNoBroadcast {
       val emb = graft.core.Tables.embeddings(spark, sf)
@@ -405,4 +403,13 @@ class PlanAssertionsSpec extends SparkTestBase {
       s"removal join should broadcast the boilerplate set, got:\n${p.take(1500)}")
     assert(!p.contains("CartesianProduct"), "no line-pair expansion may appear")
   }
+}
+
+object PlanAssertionsSpec {
+
+  /** Shuffle exchanges the planner inserted to satisfy a join or
+    * aggregate: broadcast and reused exchanges do not count.
+    */
+  def ensureExchanges(p: String): Int =
+    "Exchange hashpartitioning[^\\n]*ENSURE_REQUIREMENTS".r.findAllIn(p).size
 }

@@ -1,7 +1,7 @@
 package graft.dev
 
 /** Dev-only: RUN named queries and print the EXECUTED plan's join
-  * strategies and exchange count — the static explain shows the
+  * strategies and shuffle-exchange count — the static explain shows the
   * pre-AQE plan (SortMergeJoin rows that AQE upgrades to broadcast at
   * runtime), so "fix the join strategy" decisions must read this, not
   * PlanDump (guide §7.2).
@@ -24,7 +24,7 @@ object ExecPlanProbe {
       println(f"[execplan] $n%-38s SMJ=${"SortMergeJoin".r.findAllIn(p).size}%2d " +
         f"BHJ=${"BroadcastHashJoin".r.findAllIn(p).size}%2d " +
         f"SHJ=${"ShuffledHashJoin".r.findAllIn(p).size}%2d " +
-        f"Exch=${"Exchange".r.findAllIn(p).size}%2d " +
+        f"Exch=${graft.PlanAssertionsSpec.ensureExchanges(p)}%2d " +
         f"AQERead=${"AQEShuffleRead".r.findAllIn(p).size}%2d")
       graft.operators.Lineage.release(df, blocking = true)
     }

@@ -243,6 +243,27 @@ class XlsxSpec extends SparkTestBase {
       Xlsx.readGridBytes(bytes, "Local_authority", "bomb.xlsx", maxPartBytes = 1024L * 1024)
     }
     assert(e.getMessage.contains("zip bomb") && e.getMessage.contains("bomb.xlsx"))
+
+    // a workbook read by path gets the same default bound: sharedStrings
+    // padded with 1 MiB XML comments past MaxPartBytes, streamed into
+    // the zip so the fixture never sits in memory whole
+    val f = java.nio.file.Files.createTempFile("graft_bomb", ".xlsx")
+    val zos = new ZipOutputStream(java.nio.file.Files.newOutputStream(f))
+    def put(name: String, content: String): Unit = {
+      zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
+    }
+    put("xl/workbook.xml", workbookXml)
+    put("xl/_rels/workbook.xml.rels", relsXml)
+    put("xl/worksheets/sheet2.xml", sheet2Xml)
+    zos.putNextEntry(new ZipEntry("xl/sharedStrings.xml"))
+    zos.write(sharedXml.replace("</sst>", "").getBytes("UTF-8"))
+    val comment = ("<!-- " + "pad " * ((1 << 20) / 4) + " -->").getBytes("UTF-8")
+    (0L to Xlsx.MaxPartBytes / comment.length).foreach(_ => zos.write(comment))
+    zos.write("</sst>".getBytes("UTF-8"))
+    zos.closeEntry(); zos.close()
+    val onPath = intercept[IllegalArgumentException](Xlsx.readGrid(f.toString, "Local_authority"))
+    assert(onPath.getMessage.contains("zip bomb") && onPath.getMessage.contains(f.toString),
+      onPath.getMessage)
   }
 
   /** Peak LIVE heap during `body`, sampled with forced GC so transient

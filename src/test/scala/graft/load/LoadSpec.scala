@@ -233,6 +233,21 @@ class LoadSpec extends SparkTestBase {
     assert(!spark.catalog.tableExists(t))
   }
 
+  for ((sink, publish) <- Seq[(String, String => Any)](
+      "replaceTable" -> (dir => Load.replaceTable(spark, Seq(1).toDF("v"), dir).get),
+      "IndexStore.saveKnnGraph" -> (dir => graft.operators.IndexStore.saveKnnGraph(spark,
+        Seq((1L, 2L, 0.5)).toDF("query_id", "neighbor_id", "sim"), dir)))) {
+    test(s"orphaned path backup without a destination refuses to load ($sink)") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_orphan").toString + "/t"
+      Seq(42).toDF("v").write.parquet(dir + "__old")
+      val e = intercept[IllegalStateException](publish(dir))
+      assert(e.getMessage.contains("recover manually"), e.getMessage)
+      // the backup copy is untouched and the destination was not created
+      assert(spark.read.parquet(dir + "__old").as[Int].collect().toSeq == Seq(42))
+      assert(!new java.io.File(dir).exists)
+    }
+  }
+
   // ---- JDBC sink (embedded Derby — a real connection, real
   //      transaction semantics: the closest testable analogue of the
   //      reference's Snowflake TRUNCATE + bulk load + ROLLBACK) ----
