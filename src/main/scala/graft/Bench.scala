@@ -366,22 +366,18 @@ object Bench {
       // property (advice r10)
       if (pausedQ >= 0.0005) pausedByQuery(q.name) = pausedQ
       val la0 = loadAvg
-      // build/probe split: an index-backed query's one-time build is
+      // build/probe split: a staged query's one-time build is
       // staged here, OUTSIDE the probe's timer but still measured —
       // both land in the contract line (builds map + probe seconds) and
       // both count in the total, so the split can't flatter the sum.
-      // a prepare failure must not kill the whole suite: the run falls
-      // back to building inline (the Verify path), which the timed
-      // region then measures honestly. Partially-staged slots are
-      // dropped first — otherwise run() would consume the part that DID
-      // build and its cost would appear in neither the builds map nor
-      // the timed region.
+      // a prepare failure must not kill the whole suite: it staged
+      // nothing (GraftQuery.staged), so the run builds inline and the
+      // timed region measures that honestly.
       val buildSec = q.prepare.flatMap { p =>
         val b0 = System.nanoTime()
         try { p(spark, sfDir); Some((System.nanoTime() - b0) / 1e9) }
         catch {
           case e: Throwable =>
-            graft.core.Prepared.dropPrefix(q.name)
             System.err.println(s"[bench] ${q.name} prepare failed (run will build inline): ${e.getMessage}")
             None
         }

@@ -56,6 +56,7 @@ object Ivf {
   def build(
       df: DataFrame, idCol: String, vecCol: String, nCentroids: Int,
       lloydSteps: Int = 2, farthestSeeding: Boolean = false): (DataFrame, DataFrame) = {
+    require(nCentroids >= 1, s"nCentroids must be >= 1, got $nCentroids")
     require(lloydSteps >= 0, s"lloydSteps must be >= 0, got $lloydSteps")
     val p = prep(df, idCol, vecCol).persist(StorageLevel.MEMORY_AND_DISK)
     // cid is just a deterministic cell id: the seed's own vid serves (no
@@ -210,6 +211,12 @@ object Ivf {
     (index._1, merged)
   }
 
+  /** `k` and `nProbe` below 1 would keep no rank and empty the result. */
+  private[operators] def requireProbe(k: Int, nProbe: Int): Unit = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
+  }
+
   /** Probe a PREBUILT index (from `build`) — the steady-state serving
     * path: build once, probe many query batches without re-clustering.
     */
@@ -217,6 +224,7 @@ object Ivf {
       centroids: DataFrame, assignments: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nProbe: Int): DataFrame = {
+    requireProbe(k, nProbe)
     val q = prep(queries, idCol, vecCol)
       .withColumnRenamed("vid", "query_id").withColumnRenamed("v", "qv")
     val probes = nearest(

@@ -111,6 +111,7 @@ object IvfPq {
   def probe(
       ix: Index, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nProbe: Int): DataFrame = {
+    Ivf.requireProbe(k, nProbe)
     val spark = queries.sparkSession
     import spark.implicits._
     val q = Similarity.prep(queries, idCol, vecCol)

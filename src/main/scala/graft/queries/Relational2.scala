@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.GraftQuery
 import graft.core.Tables
@@ -244,32 +245,23 @@ object Relational2 {
     //      bit-for-bit) + a flag pinning IVF's mean recall@10 ≥ 0.6
     //      (measured 0.84 at sf0.01, 1.0 at sf0.1; IvfSpec additionally
     //      pins 0.96 on its fixture) ----
-    GraftQuery(
+    GraftQuery.staged(
       "q48_ann_ivf",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        // build/probe split: the bench's prepare stages the one-time
-        // index build (and the oracle's exact anchors) so the timed
-        // region is the steady-state probe; absent a staged slot
-        // (Verify, tests) the build runs inline — identical results.
-        val ix = graft.core.Prepared
-          .take[(org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]("q48_ann_ivf")
-          .getOrElse(graft.operators.Ivf.build(emb, "vec_id", "embedding", nCentroids = 16))
+        (graft.operators.Ivf.build(emb, "vec_id", "embedding", nCentroids = 16),
+          VectorQueries.exactAnchors(emb, 10))
+      },
+      (s, d, built: ((DataFrame, DataFrame), DataFrame)) => {
+        val (ix, exact) = built
+        val emb = Tables.embeddings(s, d)
         val ann = graft.operators.Ivf.probe(
             ix._1, ix._2, emb.where(col("vec_id") < 5), "vec_id", "embedding",
             k = 10, nProbe = 4)
           .localCheckpoint()
         graft.operators.Ivf.release(ix)
-        val exact = graft.core.Prepared
-          .take[org.apache.spark.sql.DataFrame]("q48_ann_ivf.exact")
-        VectorQueries.exactAnchoredRecall(emb, ann, k = 10, floor = 0.6, staged = exact)
+        VectorQueries.exactAnchoredRecall(exact, ann, floor = 0.6)
       },
-      Some(VectorQueries.bruteTopKRecallOracle(10)),
-      prepare = Some((s, d) => {
-        val emb = Tables.embeddings(s, d)
-        graft.core.Prepared.put("q48_ann_ivf",
-          graft.operators.Ivf.build(emb, "vec_id", "embedding", nCentroids = 16))
-        graft.core.Prepared.put("q48_ann_ivf.exact", VectorQueries.exactAnchors(emb, 10))
-      }))
+      Some(VectorQueries.bruteTopKRecallOracle(10)))
   )
 }

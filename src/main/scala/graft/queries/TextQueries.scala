@@ -192,25 +192,20 @@ object TextQueries {
     //      the 8×2 banding theoretically finds 99.7% of candidates).
     //      DedupSpec separately pins planted-dup recall; reported
     //      jaccard is exact in both paths. ----
-    GraftQuery(
+    GraftQuery.staged(
       "q55_dedup_minhash_fast",
-      (s, d) => {
+      // The md5 baseline is q34's WORK, re-used here only as the recall
+      // anchor — so it is the staged build and the q55 probe row times
+      // ONLY the fast path + flag join (retiring the round-9
+      // double-count). rebase, not bare localCheckpoint: the operator's
+      // internal shingle/band checkpoints are superseded by this one and
+      // must be released here, or they leak past the truncated plan. The
+      // checkpoint feeds BOTH the output rows and the recall flag.
+      (s, d) => graft.operators.Lineage.rebase(
+        Dedup.minhashLsh(Tables.documents(s, d), "doc_id", "text",
+          shingleN = 3, bands = 8, rowsPerBand = 2, tau = 0.3)),
+      (s, d, md5: org.apache.spark.sql.DataFrame) => {
         val docs = Tables.documents(s, d)
-        // The md5 baseline is q34's WORK, re-used here only as the
-        // recall anchor — so the bench stages it via prepare (build
-        // seconds land in the `builds` map; the q55 probe row times
-        // ONLY the fast path + flag join, retiring the round-9
-        // double-count). Unstaged callers (Verify, specs) build
-        // inline: rebase (not bare localCheckpoint) because the
-        // operator's internal shingle/band checkpoints are superseded
-        // by this one and must be released here, or they leak past
-        // the truncated plan. Either way the checkpoint feeds BOTH
-        // the output rows and the recall flag without re-execution.
-        val md5 = graft.core.Prepared
-          .take[org.apache.spark.sql.DataFrame]("q55_dedup_minhash_fast")
-          .getOrElse(graft.operators.Lineage.rebase(
-            Dedup.minhashLsh(docs, "doc_id", "text",
-              shingleN = 3, bands = 8, rowsPerBand = 2, tau = 0.3)))
         val hi = md5.where(col("jaccard") >= 0.7).select("doc_a", "doc_b")
         // Band collision is a PAIR-level event: (a,b) are candidates iff
         // one of their band signatures matches, regardless of what other
@@ -236,11 +231,7 @@ object TextQueries {
           .select((col("_r") >= 0.9).cast("long").as("fast_ok"))
         md5.crossJoin(broadcast(flag))
       },
-      Some(minhashMd5OracleSql(",\n      CAST(1 AS BIGINT) AS fast_ok")),
-      prepare = Some((s, d) => graft.core.Prepared.put("q55_dedup_minhash_fast",
-        graft.operators.Lineage.rebase(
-          Dedup.minhashLsh(Tables.documents(s, d), "doc_id", "text",
-            shingleN = 3, bands = 8, rowsPerBand = 2, tau = 0.3))))),
+      Some(minhashMd5OracleSql(",\n      CAST(1 AS BIGINT) AS fast_ok"))),
 
     // ---- q35: exact bigram Jaccard within a blocking key ----
     GraftQuery(

@@ -64,22 +64,14 @@ object TextQueries10 {
 
   /** ONE trained model per fixture dir, shared by q217 and q218
     * (round-14 verdict #2: q218 was retraining the exact model q217
-    * had just trained, and both trained inside the timed region).
-    * Training is the q48/q210 build stage: each query's `prepare` hook
-    * calls this, so Bench times the single training wall in the
-    * `builds` map (q217 pays it, q218's hook is a cache hit) and the
-    * probe `sec` times scoring only. A memo — not a [[graft.core.Prepared]]
-    * slot — because the model must survive BOTH queries: it is plain
-    * driver data (a weight array), not checkpoint-backed frames, so
-    * the consumed-once/stale-blocks rationale behind Prepared does not
-    * apply. Semantically invisible either way: training is
-    * bit-deterministic (LangIdSpec), so Verify's prepare-free path
-    * (train inline on first use, reuse for q218) returns identical
-    * predictions.
+    * had just trained), so q218's build is a cache hit. The model is
+    * plain driver data (a weight array) and training is
+    * bit-deterministic (LangIdSpec), so the memo is semantically
+    * invisible.
     */
   private val modelCache =
     new java.util.concurrent.ConcurrentHashMap[String, LangId.Model]()
-  private[graft] def sharedModel(
+  private def sharedModel(
       s: org.apache.spark.sql.SparkSession, d: String): LangId.Model =
     modelCache.computeIfAbsent(d, _ =>
       LangId.train(planted(s, d).where(col("doc_id") % 5 === 0), "lang_true"))
@@ -99,14 +91,12 @@ object TextQueries10 {
     * the CPU-bound per-row stages fanOut exists for.
     */
   private def scoredKeeping(
-      s: org.apache.spark.sql.SparkSession, d: String, keep: Seq[String]) =
+      s: org.apache.spark.sql.SparkSession, d: String, model: LangId.Model,
+      keep: Seq[String]) =
     LangId.score(
       graft.core.Partitioning.fanOut(planted(s, d))
         .withColumn("n_chars", length(col("text")).cast("long")),
-      sharedModel(s, d), keep = keep)
-
-  private val prepareLid: Option[(org.apache.spark.sql.SparkSession, String) => Unit] =
-    Some((s, d) => { sharedModel(s, d); () })
+      model, keep = keep)
 
   // ---- the HARD fixture (round-14 verdict #7): a SAME-SCRIPT pair.
   // The four q217 alphabets are disjoint scripts — every bigram is
@@ -147,14 +137,6 @@ object TextQueries10 {
         concat(lit("S"), cls2.cast("string")).as("lang_true"),
         substring(plantedHardText, 1, HardTrunc).as("text"))
 
-  private[graft] def sharedHardModel(
-      s: org.apache.spark.sql.SparkSession, d: String): LangId.Model =
-    modelCache.computeIfAbsent(d + "#hard", _ =>
-      LangId.train(plantedHard(s, d).where(col("doc_id") % 5 === 0), "lang_true"))
-
-  private val prepareLidHard: Option[(org.apache.spark.sql.SparkSession, String) => Unit] =
-    Some((s, d) => { sharedHardModel(s, d); () })
-
   def queries: Seq[GraftQuery] = Seq(
 
     // ---- q217: trained language-ID — fastText-shaped multi-class LR
@@ -168,10 +150,11 @@ object TextQueries10 {
     //      planted alphabets are structurally separable, so the gate
     //      has full margin; a trainer/featurizer regression flips
     //      thousands of rows). ----
-    GraftQuery(
+    GraftQuery.staged(
       "q217_trained_language_id",
-      (s, d) => {
-        val scored = scoredKeeping(s, d, Seq("lang_true", "n_chars"))
+      sharedModel,
+      (s, d, model: LangId.Model) => {
+        val scored = scoredKeeping(s, d, model, Seq("lang_true", "n_chars"))
         val flag = scored
           .agg(avg((col("predicted") === col("lang_true")).cast("double")).as("_acc"))
           .select((col("_acc") >= 0.95).cast("long").as("acc_ok"))
@@ -186,8 +169,7 @@ object TextQueries10 {
           CAST(1 AS BIGINT) AS acc_ok
         FROM planted
       """),
-      doc = "Trained language-ID: multi-class LR on hashed char bigrams, holdout accuracy-floor reduced assertion",
-      prepare = prepareLid),
+      doc = "Trained language-ID: multi-class LR on hashed char bigrams, holdout accuracy-floor reduced assertion"),
 
     // ---- q218: the q85 corpus-prep funnel driven by the TRAINED LID
     //      (round-13 verdict #6 "chained into q85's pipeline"): quality
@@ -198,9 +180,10 @@ object TextQueries10 {
     //      and pins acc_ok=1: with holdout accuracy at 1.0 the two
     //      keys coincide, and any model drift flips both the flag and
     //      the per-language counts. ----
-    GraftQuery(
+    GraftQuery.staged(
       "q218_lid_corpus_funnel",
-      (s, d) => {
+      sharedModel,
+      (s, d, model: LangId.Model) => {
         import graft.functions.TextFunctions.{tokenCount, textShingles, fingerprint}
         // predicted + lang_true + text ride one scoring map (no join
         // back on doc_id — scoring is per-row; guide §2.4).
@@ -210,7 +193,7 @@ object TextQueries10 {
         // checkpoint runs the scoring pass ONCE (solo A/B in
         // OPTIMIZATION_r16.md §A5). Lazy: the flag aggregate below is
         // the materializing action either way.
-        val docs = scoredKeeping(s, d, Seq("lang_true", "text"))
+        val docs = scoredKeeping(s, d, model, Seq("lang_true", "text"))
           .localCheckpoint(false)
         val flag = docs
           .agg(avg((col("predicted") === col("lang_true")).cast("double")).as("_acc"))
@@ -276,8 +259,7 @@ object TextQueries10 {
           AND NOT EXISTS (SELECT 1 FROM contaminated c WHERE c.doc_id = s.doc_id)
         GROUP BY lang_true
       """),
-      doc = "q85 corpus funnel keyed by the trained LID's predictions over the planted multilingual corpus",
-      prepare = prepareLid),
+      doc = "q85 corpus funnel keyed by the trained LID's predictions over the planted multilingual corpus"),
 
     // ---- q220: trained LID on the HARD fixture (round-14 verdict #7):
     //      a SAME-SCRIPT Latin pair sharing half the alphabet, truncated
@@ -290,13 +272,14 @@ object TextQueries10 {
     //      confusion (1.8k-2.2k misclassified docs per class at sf1),
     //      deterministic per fixture because training is bit-exact.
     //      LangIdSpec pins the confusion matrix shape on this fixture. ----
-    GraftQuery(
+    GraftQuery.staged(
       "q220_lid_same_script",
-      (s, d) => {
+      (s, d) => LangId.train(plantedHard(s, d).where(col("doc_id") % 5 === 0), "lang_true"),
+      (s, d, model: LangId.Model) => {
         val scored = LangId.score(
           graft.core.Partitioning.fanOut(plantedHard(s, d))
             .withColumn("n_chars", length(col("text")).cast("long")),
-          sharedHardModel(s, d), keep = Seq("lang_true", "n_chars"))
+          model, keep = Seq("lang_true", "n_chars"))
         val flag = scored
           .agg(avg((col("predicted") === col("lang_true")).cast("double")).as("_acc"))
           .select((col("_acc") >= 0.8).cast("long").as("acc_ok"))
@@ -309,7 +292,6 @@ object TextQueries10 {
           CAST(1 AS BIGINT) AS acc_ok
         FROM planted
       """),
-      doc = "Trained LID on the same-script short-text fixture: accuracy-floor reduced assertion with honest confusion",
-      prepare = prepareLidHard)
+      doc = "Trained LID on the same-script short-text fixture: accuracy-floor reduced assertion with honest confusion")
   )
 }

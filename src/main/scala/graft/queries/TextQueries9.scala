@@ -119,25 +119,6 @@ object TextQueries9 {
         .as("text"))
   }
 
-  /** ONE trained model per fixture dir (the q217/q219 shared-model
-    * discipline, r15): q215's training is the build stage — its
-    * `prepare` hook routes the wall into Bench's `builds` map, the
-    * probe times scoring only. At sf10 the training slice crosses the
-    * driver-GD gate and the distributed lane costs ~60 s; leaving that
-    * inside the timed region made q215 the least comparable row of the
-    * sf10 gate (the r14 verdict's q217/q218 argument at one scale up).
-    * Bit-deterministic training makes the memo semantically invisible.
-    * 12 rounds: measured 1.00 accuracy from round 8 up at sf0.01/sf0.1
-    * (presence features separate the planted markers fast) — 1.5x the
-    * needed depth at ~60% of the default 20-round cost.
-    */
-  private val q215Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.operators.QualityClassifier.Model]()
-  private def q215SharedModel(
-      s: org.apache.spark.sql.SparkSession, d: String): graft.operators.QualityClassifier.Model =
-    q215Cache.computeIfAbsent(d, _ =>
-      graft.operators.QualityClassifier.train(q215Planted(s, d), "label", iters = 12))
-
   def queries: Seq[GraftQuery] = Seq(
 
     // ---- q214: HTML main-content extraction — strip script/style/
@@ -187,11 +168,16 @@ object TextQueries9 {
     //      the planted markers perfectly at every bench scale, so the
     //      gate has full margin; an optimizer/accumulation regression
     //      flips 500 rows). ----
-    GraftQuery(
+    GraftQuery.staged(
       "q215_trained_quality_classifier",
-      (s, d) => {
+      // training is the staged build: at sf10 the training slice crosses
+      // the driver-GD gate and the distributed lane costs ~60 s. 12
+      // rounds: measured 1.00 accuracy from round 8 up at sf0.01/sf0.1
+      // (presence features separate the planted markers fast) — 1.5x
+      // the needed depth at ~60% of the default 20-round cost.
+      (s, d) => graft.operators.QualityClassifier.train(q215Planted(s, d), "label", iters = 12),
+      (s, d, model: graft.operators.QualityClassifier.Model) => {
         import graft.operators.QualityClassifier
-        val model = q215SharedModel(s, d)
         // label/n_tokens ride THROUGH the per-row scoring map (keep
         // columns) instead of joining predictions back on doc_id — two
         // exchanges over two derivations of the same scan (guide §2.4);
@@ -217,8 +203,7 @@ object TextQueries9 {
           CAST(1 AS BIGINT) AS acc_ok
         FROM documents
       """),
-      doc = "Trained quality classifier: deterministic LR on hashed presence features, accuracy-floor reduced assertion",
-      prepare = Some((s, d) => { q215SharedModel(s, d); () })),
+      doc = "Trained quality classifier: deterministic LR on hashed presence features, accuracy-floor reduced assertion"),
 
     // ---- q216: boilerplate-LINE removal over the EXTRACTED corpus —
     //      the CCNet-family scrub chained onto q214's extraction (the

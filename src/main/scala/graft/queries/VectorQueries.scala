@@ -52,24 +52,18 @@ object VectorQueries {
     FROM ranked WHERE rank <= $k
   """
 
-  /** Spark side of [[bruteTopKRecallOracle]]: exact brute-force top-k
-    * rows with `recall_ok` = (mean recall@k of `ann` vs that exact set
-    * ≥ floor) attached as a one-row broadcast stat. Each query
-    * contributes exactly k exact rows, so the overall hit fraction IS
-    * the mean per-query recall. The floor is picked per path from
-    * measured recalls at sf0.01/sf0.1 with ≥2× margin, far above the
-    * k/N chance level (~0.002 on the fixture).
+  /** Spark side of [[bruteTopKRecallOracle]]: the exact brute-force
+    * top-k rows (`exact`, from [[exactAnchors]]) with `recall_ok` =
+    * (mean recall@k of `ann` vs that exact set ≥ floor) attached as a
+    * one-row broadcast stat. Each query contributes exactly k exact
+    * rows, so the overall hit fraction IS the mean per-query recall.
+    * The floor is picked per path from measured recalls at sf0.01/sf0.1
+    * with ≥2× margin, far above the k/N chance level (~0.002 on the
+    * fixture).
     */
   private[queries] def exactAnchoredRecall(
-      emb: org.apache.spark.sql.DataFrame, ann: org.apache.spark.sql.DataFrame,
-      k: Int, floor: Double,
-      staged: Option[org.apache.spark.sql.DataFrame] = None): org.apache.spark.sql.DataFrame = {
-    // staged: the brute-force subtree feeds BOTH the output rows and
-    // the recall flag — without the checkpoint Spark executes the
-    // corpus-wide scored join + window twice per run. A bench `prepare`
-    // can pass the checkpointed anchors in (`staged`) so the oracle's
-    // exact recompute doesn't ride inside the timed probe.
-    val exact = staged.getOrElse(exactAnchors(emb, k))
+      exact: org.apache.spark.sql.DataFrame, ann: org.apache.spark.sql.DataFrame,
+      floor: Double): org.apache.spark.sql.DataFrame = {
     val flag = exact.select(col("query_id"), col("neighbor_id"))
       .join(ann.select(col("query_id"), col("neighbor_id")).distinct()
         .withColumn("_hit", lit(1L)), Seq("query_id", "neighbor_id"), "left")
@@ -79,8 +73,10 @@ object VectorQueries {
   }
 
   /** The exact brute-force anchor set [[exactAnchoredRecall]] compares
-    * against, checkpointed eagerly — exposed so bench `prepare` hooks
-    * can stage it outside the timed probe.
+    * against, checkpointed eagerly: it feeds BOTH the output rows and
+    * the recall flag, which would otherwise run the corpus-wide scored
+    * join + window twice. Part of the staged builds, so the recompute
+    * stays outside the timed probe.
     */
   private[queries] def exactAnchors(
       emb: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame =

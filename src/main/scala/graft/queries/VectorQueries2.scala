@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.GraftQuery
 import graft.core.Tables
@@ -57,28 +58,21 @@ object VectorQueries2 {
     //      ~0.002; measured means are 0.28 (sf0.01) / 0.12 (sf0.1).
     //      PqSpec additionally pins exactness on centroid-aligned
     //      vectors and bit-identical retraining. ----
-    GraftQuery(
+    GraftQuery.staged(
       "q112_pq_topk",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        // build/probe split (q48 pattern): prepare stages the codebook
-        // training (driver Lloyd over the hash sample) and the oracle's
-        // exact anchors; unstaged callers (Verify, tests) build inline.
-        val cb = graft.core.Prepared.take[graft.operators.Pq.Codebooks]("q112_pq_topk")
-          .getOrElse(graft.operators.Pq.train(emb, "vec_id", "embedding"))
+        (graft.operators.Pq.train(emb, "vec_id", "embedding"),
+          VectorQueries.exactAnchors(emb, 10))
+      },
+      (s, d, built: (graft.operators.Pq.Codebooks, DataFrame)) => {
+        val (cb, exact) = built
+        val emb = Tables.embeddings(s, d)
         val ann = graft.operators.Pq.adcTopK(
           emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", cb, topK = 10)
-        val exact = graft.core.Prepared
-          .take[org.apache.spark.sql.DataFrame]("q112_pq_topk.exact")
-        VectorQueries.exactAnchoredRecall(emb, ann, k = 10, floor = 0.05, staged = exact)
+        VectorQueries.exactAnchoredRecall(exact, ann, floor = 0.05)
       },
-      Some(VectorQueries.bruteTopKRecallOracle(10)),
-      prepare = Some((s, d) => {
-        val emb = Tables.embeddings(s, d)
-        graft.core.Prepared.put("q112_pq_topk",
-          graft.operators.Pq.train(emb, "vec_id", "embedding"))
-        graft.core.Prepared.put("q112_pq_topk.exact", VectorQueries.exactAnchors(emb, 10))
-      })),
+      Some(VectorQueries.bruteTopKRecallOracle(10))),
 
     // ---- q113: IVF-PQ — the billion-scale composition (coarse cells
     //      prune candidates, product-quantized RESIDUALS score them by
@@ -93,15 +87,16 @@ object VectorQueries2 {
     //      IvfPqSpec additionally pins that residual quantization beats
     //      raw PQ at the same code budget, and that refined recall
     //      dominates unrefined. ----
-    GraftQuery(
+    GraftQuery.staged(
       "q113_ivfpq_topk",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        // build/probe split (q48 pattern): prepare stages the IVF-PQ
-        // index (coarse Lloyd + residual codebooks + coded corpus) and
-        // the exact anchors; unstaged callers build inline.
-        val ix = graft.core.Prepared.take[graft.operators.IvfPq.Index]("q113_ivfpq_topk")
-          .getOrElse(graft.operators.IvfPq.build(emb, "vec_id", "embedding", nCentroids = 16))
+        (graft.operators.IvfPq.build(emb, "vec_id", "embedding", nCentroids = 16),
+          VectorQueries.exactAnchors(emb, 10))
+      },
+      (s, d, built: (graft.operators.IvfPq.Index, DataFrame)) => {
+        val (ix, exact) = built
+        val emb = Tables.embeddings(s, d)
         val queries = emb.where(col("vec_id") < 5)
         val pool = graft.operators.IvfPq.probe(
             ix, queries, "vec_id", "embedding", k = 80, nProbe = 4)
@@ -109,24 +104,16 @@ object VectorQueries2 {
         graft.operators.IvfPq.release(ix)
         val ann = graft.operators.Similarity.refineExact(
           pool, emb, queries, "vec_id", "embedding", k = 10, depth = 80)
-        val exact = graft.core.Prepared
-          .take[org.apache.spark.sql.DataFrame]("q113_ivfpq_topk.exact")
-        VectorQueries.exactAnchoredRecall(emb, ann, k = 10, floor = 0.4, staged = exact)
+        VectorQueries.exactAnchoredRecall(exact, ann, floor = 0.4)
       },
-      Some(VectorQueries.bruteTopKRecallOracle(10)),
-      prepare = Some((s, d) => {
-        val emb = Tables.embeddings(s, d)
-        graft.core.Prepared.put("q113_ivfpq_topk",
-          graft.operators.IvfPq.build(emb, "vec_id", "embedding", nCentroids = 16))
-        graft.core.Prepared.put("q113_ivfpq_topk.exact", VectorQueries.exactAnchors(emb, 10))
-      })),
+      Some(VectorQueries.bruteTopKRecallOracle(10))),
 
     // ---- q206: GRAPH-ANN — HNSW-style greedy beam search over the
     //      persisted kNN graph (Similarity.graphSearch on knnGraph's
-    //      edges; q204's kernel is the index build). The prepare hook
-    //      exercises the FULL index lifecycle: build → IndexStore
-    //      atomic persist → load back, so the benched probe serves
-    //      from storage like a production search tier. Same
+    //      edges; q204's kernel is the index build). The build is the
+    //      FULL index lifecycle: build → IndexStore atomic persist →
+    //      load back, so the probe serves from storage like a
+    //      production search tier. Same
     //      reduced-assertion oracle as q48/q112/q113 (the graph walk
     //      is data-dependent; the query returns the exact brute-force
     //      top-k, hash-matched bit-for-bit, plus a recall flag the
@@ -140,38 +127,11 @@ object VectorQueries2 {
     //      1.00 (sf0.1, N=2k) / 0.98 (sf1, N=20k) (GraphAnnProbe3,
     //      BASELINE r15) — ≥1.63× margin, ~490× above the ~0.002
     //      chance level, at equal-or-lower probe wall. ----
-    GraftQuery(
+    GraftQuery.staged(
       "q206_graph_ann",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        // build/probe split: prepare stages the LOADED persisted graph;
-        // unstaged callers (Verify, specs) build inline — identical
-        // edges either way (parquet round-trips longs/doubles exactly)
-        val graph = graft.core.Prepared
-          .take[org.apache.spark.sql.DataFrame]("q206_graph_ann")
-          .getOrElse(graft.operators.Similarity
-            .knnGraph(emb, "vec_id", "embedding", k = 0, refineRounds = 1))
-        val queries = emb.where(col("vec_id") < 5)
-        val ann = graft.operators.Similarity.graphSearch(
-          graph, emb, queries, "vec_id", "embedding", k = 10,
-          beam = 0, rounds = 0) // 0 = auto-size by corpus count
-        // graphSearch staged its own eager copies, so the source graph
-        // (a persisted load OR an inline plan with internal bucket
-        // checkpoints) releases here — both cleanups are no-ops on the
-        // other path
-        graft.operators.Lineage.release(graph)
-        graph.unpersist()
-        val exact = graft.core.Prepared
-          .take[org.apache.spark.sql.DataFrame]("q206_graph_ann.exact")
-        VectorQueries.exactAnchoredRecall(emb, ann, k = 10, floor = 0.6, staged = exact)
-      },
-      Some(VectorQueries.bruteTopKRecallOracle(10)),
-      prepare = Some((s, d) => {
-        val emb = Tables.embeddings(s, d)
-        val dir = sys.props("java.io.tmpdir") + "/graft_index_q206"
-        // release the BUILD plan after the save: its internal LSH
-        // bucket checkpoint would otherwise stay registered for the
-        // whole suite (the persisted parquet is the serving copy)
+        val dir = TextQueries8.tempRoot("graft_index_q206") + "/graph"
         // AUTO degree (k=0 → max(8, 1.2·log₂N)) + 2 NN-descent rounds
         // (round-14 verdict #1): the FIXED deg-8 seed graph was what
         // made q206 recall decay with N — navigability needs degree to
@@ -181,11 +141,24 @@ object VectorQueries2 {
         val built = graft.operators.Similarity.knnGraph(
           emb, "vec_id", "embedding", k = 0, refineRounds = 1)
         graft.operators.IndexStore.saveKnnGraph(s, built, dir)
+        // the persisted parquet is the serving copy: the build plan's
+        // internal LSH bucket checkpoint is released here
         graft.operators.Lineage.release(built, blocking = true)
-        graft.core.Prepared.put("q206_graph_ann",
-          graft.operators.IndexStore.loadKnnGraph(s, dir))
-        graft.core.Prepared.put("q206_graph_ann.exact", VectorQueries.exactAnchors(emb, 10))
-      })),
+        (graft.operators.IndexStore.loadKnnGraph(s, dir), VectorQueries.exactAnchors(emb, 10))
+      },
+      (s, d, built: (DataFrame, DataFrame)) => {
+        val (graph, exact) = built
+        val emb = Tables.embeddings(s, d)
+        val queries = emb.where(col("vec_id") < 5)
+        val ann = graft.operators.Similarity.graphSearch(
+          graph, emb, queries, "vec_id", "embedding", k = 10,
+          beam = 0, rounds = 0) // 0 = auto-size by corpus count
+        // graphSearch staged its own eager copies, so the loaded graph
+        // unpins here
+        graph.unpersist()
+        VectorQueries.exactAnchoredRecall(exact, ann, floor = 0.6)
+      },
+      Some(VectorQueries.bruteTopKRecallOracle(10))),
 
     // ---- q151: SemDeDup — semantic deduplication by coarse cells
     //      (arXiv:2303.09540). Output rows are the PORTABLE path: seed
@@ -201,9 +174,20 @@ object VectorQueries2 {
     //      floor keeps >=0.15 margin under float-sum assignment
     //      jitter). q152 reports the recovered cross-cell pairs
     //      themselves on the portable seed family. ----
-    GraftQuery(
+    GraftQuery.staged(
       "q151_semdedup",
       (s, d) => {
+        val emb = Tables.embeddings(s, d)
+        // lloydCells already returns an eager localCheckpoint; the exact
+        // pair set feeds the hit join AND the flag's denominator
+        (graft.operators.SemDedup.lloydCells(
+            emb, "vec_id", "embedding", nCells = 8, probes = 2),
+          graft.operators.Similarity.nearDupPairs(
+              emb, "vec_id", "embedding", tau = 0.4)
+            .select(col("id_a"), col("id_b")).localCheckpoint(true))
+      },
+      (s, d, built: (DataFrame, DataFrame)) => {
+        val (cells, exact) = built
         val emb = Tables.embeddings(s, d)
         val v = graft.operators.SemDedup.semanticDedup(
           emb, "vec_id", "embedding", nCells = 8, tau = 0.4)
@@ -220,18 +204,6 @@ object VectorQueries2 {
         // cells, so hits are deduped before counting; the left join +
         // coalesce makes an empty exact pair set vacuously true (the
         // q55 idiom), not a NULL flag.
-        // build/probe split (q48 pattern): the Lloyd codebook build and
-        // the oracle's exact all-pairs baseline are one-time staging,
-        // not per-query serving cost; unstaged callers (Verify, tests)
-        // build inline — identical results either way.
-        val cells = graft.core.Prepared
-          .take[org.apache.spark.sql.DataFrame]("q151_semdedup.cells")
-          .getOrElse(graft.operators.SemDedup.lloydCells(
-            emb, "vec_id", "embedding", nCells = 8, probes = 2))
-        val exact = graft.core.Prepared
-          .take[org.apache.spark.sql.DataFrame]("q151_semdedup.exact")
-          .getOrElse(graft.operators.Similarity.nearDupPairs(
-            emb, "vec_id", "embedding", tau = 0.4))
         val hits = exact.select("id_a", "id_b")
           .join(cells.select(col("vec_id").as("id_a"), col("cell")), Seq("id_a"))
           .join(cells.select(col("vec_id").as("id_b"), col("cell")), Seq("id_b", "cell"))
@@ -271,18 +243,7 @@ object VectorQueries2 {
           CAST(1 AS BIGINT) AS lloyd_ok
         FROM assigned a LEFT JOIN dom d ON a.vec_id = d.vec_id
         GROUP BY a.cid
-      """),
-      prepare = Some((s, d) => {
-        val emb = Tables.embeddings(s, d)
-        // lloydCells already returns an eager localCheckpoint
-        graft.core.Prepared.put("q151_semdedup.cells",
-          graft.operators.SemDedup.lloydCells(
-            emb, "vec_id", "embedding", nCells = 8, probes = 2))
-        graft.core.Prepared.put("q151_semdedup.exact",
-          graft.operators.Similarity.nearDupPairs(
-              emb, "vec_id", "embedding", tau = 0.4)
-            .select(col("id_a"), col("id_b")).localCheckpoint(true))
-      })),
+      """)),
 
     // ---- q152: SemDeDup cross-cell recovered pairs — the near-dup
     //      pairs the cell partition SPLITS (primary cells differ) that
@@ -297,9 +258,16 @@ object VectorQueries2 {
     //      SAME fraction instead of pinning a constant, so a capture
     //      regression flips a genuinely recomputed flag. q151 keeps the
     //      Lloyd-path capture gauge (floor 0.6 there too). ----
-    GraftQuery(
+    GraftQuery.staged(
       "q152_semdedup_crosscell",
-      (s, d) => {
+      // checkpointed: the exact pair set feeds the report AND the
+      // capture flag's numerator/denominator — without it the all-pairs
+      // baseline kernel re-runs once per consumer
+      (s, d) => graft.operators.Similarity.nearDupPairs(
+          Tables.embeddings(s, d), "vec_id", "embedding", tau = 0.4)
+        .select(col("id_a"), col("id_b"), col("sim"))
+        .localCheckpoint(true),
+      (s, d, exact: DataFrame) => {
         val emb = Tables.embeddings(s, d)
         // checkpointed: the assignment frame feeds FOUR joins below
         // (both `shared` sides, both `prim` sides) — unmaterialized,
@@ -309,17 +277,6 @@ object VectorQueries2 {
         val cells = graft.operators.SemDedup.seedCells(
             emb, "vec_id", "embedding", nCells = 8, probes = 2)
           .localCheckpoint(true)
-        // checkpointed: the exact pair set feeds the report AND the
-        // capture flag's numerator/denominator — without it the
-        // all-pairs baseline kernel re-runs once per consumer. The
-        // build/probe split (q48 pattern) stages it ahead of time in
-        // the bench; unstaged callers build inline.
-        val exact = graft.core.Prepared
-          .take[org.apache.spark.sql.DataFrame]("q152_semdedup_crosscell.exact")
-          .getOrElse(graft.operators.Similarity.nearDupPairs(
-              emb, "vec_id", "embedding", tau = 0.4)
-            .select(col("id_a"), col("id_b"), col("sim"))
-            .localCheckpoint(true))
         val shared = exact
           .join(cells.select(col("vec_id").as("id_a"), col("cell")), Seq("id_a"))
           .join(cells.select(col("vec_id").as("id_b"), col("cell")), Seq("id_b", "cell"))
@@ -378,15 +335,7 @@ object VectorQueries2 {
         JOIN prim yb ON yb.vec_id = s.id_b
         CROSS JOIN cap
         WHERE xa.cid <> yb.cid
-      """),
-      prepare = Some((s, d) => {
-        val emb = Tables.embeddings(s, d)
-        graft.core.Prepared.put("q152_semdedup_crosscell.exact",
-          graft.operators.Similarity.nearDupPairs(
-              emb, "vec_id", "embedding", tau = 0.4)
-            .select(col("id_a"), col("id_b"), col("sim"))
-            .localCheckpoint(true))
-      })),
+      """)),
 
     // ---- q164: k-NN label spread — classify unlabeled vectors
     //      (vec_id < 50 play the part) by majority vote of their k=5

@@ -8,7 +8,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * Spark JOBS each launched (eager checkpoints/counts/collects included)
   * — the evidence `.explain` cannot show for checkpoint-backed loops,
   * where an optimization removes build jobs but leaves the final plan
-  * identical (guide §1: measure the thing you changed).
+  * identical (guide §1: measure the thing you changed). A staged
+  * query's prepare is counted apart as `build_jobs`.
   *
   * Usage: sbt "Test/runMain graft.dev.JobCountProbe [sfDir] <query ...>"
   */
@@ -25,21 +26,25 @@ object JobCountProbe {
         jobs.incrementAndGet(); ()
       }
     })
+    // listener events are async: drain the bus before reading a count
+    def counted(body: => Unit): Int = {
+      jobs.set(0)
+      body
+      org.apache.spark.graft.ListenerBusBridge.drain(spark.sparkContext)
+      jobs.get()
+    }
     names.foreach { n =>
       val q = graft.Registry.byName(n)
-      // stage the build exactly like Bench (outside the counted region):
-      // the probe measures what `sec` times, not the prepare
-      q.prepare.foreach(p => p(spark, sfDir))
-      jobs.set(0)
+      // the build is counted apart, like Bench times it apart: `jobs`
+      // is what `sec` times, `build_jobs` what the prepare launched
+      val buildJobs = counted(q.prepare.foreach(p => p(spark, sfDir)))
       val t0 = System.nanoTime()
-      val df = q.run(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
-      graft.operators.Lineage.release(df, blocking = true)
-      // listener events are async — give the bus a beat to drain
-      // (listenerBus is private[spark]; a short sleep is enough for a
-      // dev probe whose jobs have all completed synchronously above)
-      Thread.sleep(300)
-      println(f"[jobcount] $n%-40s jobs=${jobs.get()}%3d wall=${(System.nanoTime() - t0) / 1e9}%6.2f s")
+      val runJobs = counted {
+        val df = q.run(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        graft.operators.Lineage.release(df, blocking = true)
+      }
+      println(f"[jobcount] $n%-40s build_jobs=$buildJobs%3d jobs=$runJobs%3d wall=${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
     spark.stop()
   }

@@ -266,6 +266,18 @@ class XlsxSpec extends SparkTestBase {
       onPath.getMessage)
   }
 
+  test("a workbook above MaxWorkbookBytes is refused by path, with its path") {
+    // sparse: the bound is checked on the file size before any read
+    val f = java.nio.file.Files.createTempFile("graft_big", ".xlsx")
+    try {
+      val raf = new java.io.RandomAccessFile(f.toFile, "rw")
+      try raf.setLength(Xlsx.MaxWorkbookBytes + 1) finally raf.close()
+      val e = intercept[IllegalArgumentException](Xlsx.readGrid(f.toString, "Local_authority"))
+      assert(e.getMessage.contains(f.toString) && e.getMessage.contains("workbook bound"),
+        e.getMessage)
+    } finally java.nio.file.Files.delete(f)
+  }
+
   /** Peak LIVE heap during `body`, sampled with forced GC so transient
     * garbage doesn't pollute the reading — a part-sized buffer held
     * across the parse (the pre-round-11 implementation) is live and

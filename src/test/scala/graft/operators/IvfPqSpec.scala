@@ -35,6 +35,19 @@ class IvfPqSpec extends SparkTestBase {
     } finally IvfPq.release(ix)
   }
 
+  test("parameters that would silently empty the result are refused by name") {
+    val emb = Tables.embeddings(spark, sf)
+    val e = intercept[IllegalArgumentException](
+      IvfPq.build(emb, "vec_id", "embedding", nCentroids = 0))
+    assert(e.getMessage.contains("nCentroids must be"), e.getMessage)
+    val ix = IvfPq.build(emb, "vec_id", "embedding", nCentroids = 4)
+    try Seq(("k", 0, 4), ("nProbe", 10, 0)).foreach { case (param, k, nProbe) =>
+      val p = intercept[IllegalArgumentException](
+        IvfPq.probe(ix, emb.where($"vec_id" < 5), "vec_id", "embedding", k, nProbe))
+      assert(p.getMessage.contains(s"$param must be"), p.getMessage)
+    } finally IvfPq.release(ix)
+  }
+
   test("exact refine stage: refined recall dominates unrefined at the same index") {
     val emb = Tables.embeddings(spark, sf)
     val queries = emb.where($"vec_id" < 5)

@@ -46,6 +46,18 @@ class IvfSpec extends SparkTestBase {
     Ivf.release(index)
   }
 
+  test("parameters that would silently empty the result are refused by name") {
+    val emb = Tables.embeddings(spark, sf)
+    val e = intercept[IllegalArgumentException](
+      Ivf.build(emb, "vec_id", "embedding", nCentroids = 0))
+    assert(e.getMessage.contains("nCentroids must be"), e.getMessage)
+    Seq(("k", 0, 4), ("nProbe", 10, 0)).foreach { case (param, k, nProbe) =>
+      val p = intercept[IllegalArgumentException](
+        Ivf.probe(emb, emb, emb.where($"vec_id" < 5), "vec_id", "embedding", k, nProbe))
+      assert(p.getMessage.contains(s"$param must be"), p.getMessage)
+    }
+  }
+
   test("HLL approx distinct stays within its declared error (q24)") {
     // round 6: the query now carries the error assertion itself — the
     // within_rsd flag the reduced-assertion oracle pins to 1
